@@ -55,6 +55,8 @@ def materialize(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
     loss mid-query recomputes nothing and fails the job; rerun it.
     A path → reliable ``.checkpoint()`` written under that directory
     (HDFS/S3 at scale): survives executor loss, the 100 TB default.
+    The directory is SparkContext-global: the first reliable call sets
+    it, and a later call naming a different one raises ``ValueError``.
     Both run the upstream jobs at DataFrame-construction time (eager):
     **building a plan that contains a materialization point launches
     Spark jobs immediately** — that is the documented contract of every
@@ -69,20 +71,17 @@ def materialize(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
     # setCheckpointDir is SparkContext-global: re-pointing it while
     # another operator checkpoints concurrently would scatter their
     # files across directories (and a later cleanup of either directory
-    # races the other). Set once; on conflict keep the FIRST directory
-    # (checkpoints stay reliable — just under the session's dir) and
-    # warn so the caller knows where their files actually are.
+    # races the other). Set once; a conflicting request raises instead
+    # of silently checkpointing somewhere the caller did not ask for.
     sc = df.sparkSession.sparkContext
     current = sc.getCheckpointDir()
     if current is None:
         sc.setCheckpointDir(checkpoint_dir)
     elif not _same_checkpoint_dir(current, checkpoint_dir):
-        import warnings
-
-        warnings.warn(
-            f"SparkContext checkpoint dir is already {current!r}; keeping it "
-            f"(requested {checkpoint_dir!r} ignored — session-global state)",
-            stacklevel=3,
+        raise ValueError(
+            f"SparkContext checkpoint dir is already {current!r}; cannot "
+            f"checkpoint under {checkpoint_dir!r} (session-global state) — "
+            "pass the session's directory or None"
         )
     return df.checkpoint(eager=True)
 
@@ -93,8 +92,9 @@ _materialize = materialize
 
 
 def _same_checkpoint_dir(current: str, requested: str) -> bool:
-    """Compare the context's (possibly scheme-qualified, e.g.
-    ``file:/tmp/x``) checkpoint dir against a requested plain path."""
+    """Whether the context's (possibly scheme-qualified) checkpoint dir
+    is the requested plain path: ``setCheckpointDir(x)`` records
+    ``file:/x/<uuid>``, so both ``x`` and that subdirectory match."""
 
     def norm(p: str) -> str:
         scheme, sep, rest = p.partition(":")
@@ -102,7 +102,8 @@ def _same_checkpoint_dir(current: str, requested: str) -> bool:
             p = rest
         return "/" + p.strip("/")
 
-    return norm(current) == norm(requested)
+    cur = norm(current)
+    return norm(requested) in (cur, cur.rsplit("/", 1)[0])
 
 
 def _bucket_pairs(keyed: DataFrame, key_col: str, id_col: str) -> DataFrame:

@@ -28,17 +28,34 @@ def read_raw_books(spark, path: str) -> DataFrame:
 
     The reference's raw dump (K1, reference scripts/extract.py:75-80) is a
     single pretty-printed JSON array whose elements are **single-element
-    arrays** wrapping each book (FIXTURES.md F1). A JSON-array-of-arrays is
+    arrays** wrapping each book (FIXTURES.md F1) — or bare book objects,
+    which the reference also accepts (``book[0] if isinstance(book, (list,
+    tuple)) else book``, scripts/transform.py:26). A JSON-array-of-arrays is
     not line-delimited, so we read whole-file text and parse with an
     explicit schema via ``from_json`` — no inference, schema drift fails at
-    the scan. At scale the bronze zone is JSONL (one wrapped record per
-    line), which the same ``from_json`` handles via the normal line reader.
+    the scan. An all-wrapper dump parses in one typed pass; one bare
+    object nulls that parse, and only then does the top level re-parse as
+    ``array<string>`` (each element keeps its own JSON text) with each
+    element parsed on its own — an array as the wrapper, a bare object as a
+    one-element wrapper. A mixed-in bare object therefore cannot empty the
+    dump, wrapper-only dumps (the extract's output) pay no second parse,
+    and the read stays one task with no extra job. At scale the bronze zone
+    is JSONL (one wrapped record per line), which the same ``from_json``
+    handles via the normal line reader.
     """
-    wrapper_schema = T.ArrayType(T.ArrayType(BOOK_STRUCT))
-    raw = spark.read.text(path, wholetext=True)
-    return raw.select(
-        F.explode(F.from_json(F.col("value"), wrapper_schema)).alias("wrapped")
+    elems = F.from_json(F.col("value"), T.ArrayType(T.StringType()))
+    per_element = F.transform(
+        elems,
+        lambda e: F.when(
+            e.startswith("["), F.from_json(e, T.ArrayType(BOOK_STRUCT))
+        ).otherwise(F.array(F.from_json(e, BOOK_STRUCT))),
     )
+    wrapped = F.coalesce(
+        F.from_json(F.col("value"), T.ArrayType(T.ArrayType(BOOK_STRUCT))),
+        per_element,
+    )
+    raw = spark.read.text(path, wholetext=True)
+    return raw.select(F.explode(wrapped).alias("wrapped"))
 
 
 def unwrap_book(wrapped: Column) -> Column:

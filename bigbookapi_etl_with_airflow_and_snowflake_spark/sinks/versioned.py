@@ -18,14 +18,21 @@ see ``write_version``):
 - **Time travel**: any retained version is readable by number
   (``read_version(..., version=3)``); audits and reproducible training
   runs read the manifest the run recorded.
-- **Atomicity**: data lands first (under a per-commit subdirectory),
-  then the manifest is staged as a fully-written temp file and
-  ``os.link``ed onto its final ``v{N}`` name — the link is the commit
-  point, so a reader can never observe a half-written (or empty)
-  manifest: the content is durable before the name exists. ``os.link``
-  fails with EEXIST when another writer won the version number, which
-  makes racing writers a loud retry (the loser rebuilds against the
-  longer chain), never a silent overwrite.
+- **Atomicity**: every write commits through ONE path, the
+  :class:`_Txn` transaction. It reads the snapshot once, stages data,
+  deletion-vector and change files under fresh registered
+  subdirectories, then stages the manifest as a fully-written temp
+  file and ``os.link``s it onto its final ``v{N}`` name — the link is
+  the commit point, so a reader can never observe a half-written (or
+  empty) manifest: the content is durable before the name exists.
+  ``os.link`` fails with EEXIST when another writer won the version
+  number; the operation decides what happens then — appends and plain
+  overwrites rebuild against the longer chain, a branch publish
+  fast-forwards only from its base, and every other write (DML,
+  restore, metadata-only commits) raises :class:`CommitConflict`.
+  Abort rule: if anything raises before the manifest link returns,
+  every registered staging is removed, so a failed or refused write
+  leaves no unreferenced data behind.
 
 At 100 TB the same layout works on an object store by swapping the
 os-level file ops for conditional PUTs; the plan shapes (parquet scan
@@ -37,6 +44,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import time
 import uuid
 from collections.abc import Callable, Sequence
@@ -426,39 +434,15 @@ def publish_branch(table_dir: str, name: str) -> int:
         with open(pub) as fh:
             base = json.load(fh)["main_version"]
 
-    def build(prior: dict | None) -> dict:
-        cur = prior["version"] if prior else 0
-        # self-heal the crash window between a publish's main commit and
-        # its published.json update: main's latest being OUR OWN earlier
-        # publish is a valid fast-forward base even if the marker is
-        # stale or lost — any other intervening commit still refuses.
-        # Matched on the fork INCARNATION id, not the name: a deleted-
-        # and-re-forked branch must not fast-forward over commits the
-        # new incarnation never saw
-        ours = (
-            prior is not None
-            and fork_id is not None
-            and prior.get("published_fork") == fork_id
-        )
-        if cur != base and not ours:
-            raise CommitConflict(
-                f"main is at v{cur} but branch {name!r} is based on "
-                f"v{base} — fast-forward publish refused; re-create the "
-                "branch from current main to pick up the new commits"
-            )
-        return {
-            "mode": "publish",
-            "files": head["files"],
-            "n_rows": head["n_rows"],
-            "schema": head.get("schema"),
-            "dv_files": head.get("dv_files") or [],
-            **_carried_mapping(head),
-            "published_branch": name,
-            "published_fork": fork_id,
-            "branch_version": head["version"],
-        }
-
-    v = _commit(table_dir, build)
+    # the publish carries nothing from main: it fast-forwards main from
+    # the branch's base version to the branch head's snapshot
+    v = _Txn(None, table_dir, 0, pin=base).commit(
+        "publish",
+        carry=head,
+        published_branch=name,
+        published_fork=fork_id,
+        branch_version=head["version"],
+    )
     tmp = pub + f".tmp.{uuid.uuid4().hex}"
     with open(tmp, "w") as fh:
         json.dump({"main_version": v, "branch_version": head["version"]}, fh)
@@ -473,8 +457,6 @@ def delete_branch(table_dir: str, name: str) -> dict:
     are untouched). Returns ``{"files_deleted": N}``. Loud on a missing
     branch. Like vacuum, a write operation under the module's
     single-writer-per-table convention."""
-    import shutil
-
     root = _manifest_root(table_dir, name)
     if not os.path.isdir(root):
         raise ValueError(
@@ -1057,24 +1039,32 @@ def _write_change_files(
     changes: DataFrame,
     table_dir: str,
     mapping: dict | None = None,
+    out: str | None = None,
 ) -> list[str]:
     """Stage a commit's row-level CHANGE SET — the Delta ``_change_data``
     pattern: parquet rows with the table's columns plus ``_change_type``
-    ('insert' | 'delete') under ``_change_data/<uuid>/``, written BEFORE
+    ('insert' | 'delete') under ``_change_data/<uuid>/`` (or ``out``,
+    a directory the caller already registered), written BEFORE
     the manifest commit and referenced by its ``change_files`` key in
     the same atomic commit. A rewrite commit that records its change
     set becomes exactly streamable (:mod:`sources.versioned_stream`)
     and exactly diffable (:func:`read_changes`) WITHOUT scanning
     carried files — the change files are O(changed rows) by
     construction, the cost CDF-on-rewrite fundamentally requires.
-    Uncommitted stagings (conflict aborts, crashes) are reclaimed by
+    Stagings a crash left uncommitted are reclaimed by
     :func:`vacuum`'s full ``_change_data`` sweep."""
     if "_change_type" not in changes.columns:
         raise ValueError("change set must carry _change_type")
-    out = os.path.join(table_dir, _CHANGE_DIR, uuid.uuid4().hex)
+    out = out or os.path.join(table_dir, _CHANGE_DIR, uuid.uuid4().hex)
     # under column mapping change files store physical names, exactly
     # like data files (_change_type is unmapped and passes through)
     _to_physical(changes, mapping).write.parquet(out)
+    return _part_files(out)
+
+
+def _part_files(out: str) -> list[str]:
+    """Sorted canonical paths of the parquet part files one write
+    staged under ``out``."""
     return sorted(
         _canon(os.path.join(out, f))
         for f in os.listdir(out)
@@ -1237,37 +1227,6 @@ def _stats_for_files(
     return out
 
 
-def _carried_stats(
-    spark: SparkSession,
-    base: dict | None,
-    files: Sequence[str],
-    new_files: Sequence[str] = (),
-) -> dict:
-    """Manifest stats fields for a child commit that carries prior
-    files: prior entries for SURVIVING files ride by value, and the
-    commit's new files get fresh envelopes (one footer pass over the
-    increment — the same O(increment) cost the commit already pays to
-    stage them). Empty dict when the table records no stats."""
-    if not base or not base.get("stats_cols"):
-        return {}
-    cols = base["stats_cols"]
-    keep = set(files)
-    stats = {
-        f: e for f, e in (base.get("stats") or {}).items() if f in keep
-    }
-    # recorded envelopes are keyed by PHYSICAL column name/dotted path
-    # (what the staged files store — frozen across renames, so
-    # rename_column never invalidates them); stats_cols stays logical
-    # (top-level or dotted struct leaf) and translates here
-    cm = _col_mapping(base)
-    stats.update(
-        _stats_for_files(
-            spark, list(new_files), [_phys_path(cm, c) for c in cols]
-        )
-    )
-    return {"stats_cols": cols, "stats": stats}
-
-
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 _PART_SHADOW = "__part_"
 _PART_MAX_VALUES = 4096
@@ -1382,44 +1341,38 @@ def _validate_partition_cols(df: DataFrame, cols: Sequence[str]) -> None:
             )
 
 
-def _carried_partitions(base: dict | None, files: Sequence[str]) -> dict:
-    """Manifest partition fields for a child commit: entries for
-    SURVIVING files ride by value; files the commit rewrote or added
-    outside the partitioned write path simply have no entry, and the
-    partition pruning pass keeps unmapped files (conservative, never
-    wrong — the same degrade contract as recorded stats). An OPTIMIZE
-    or fresh partitioned append re-records coverage."""
-    if not base or not base.get("partition_cols"):
-        return {}
+def _carry(src: dict | None, files: Sequence[str]) -> dict:
+    """Manifest fields a child commit over ``files`` inherits from the
+    snapshot ``src`` it carries (None: an overwrite, which carries
+    nothing). Schema, DVs and column mapping ride verbatim (entries of
+    DVs addressing files the commit rewrote go stale-but-harmless:
+    fresh uuid paths never reuse a dead identity, compaction reclaims
+    them). Recorded stats and partition values ride by value for the
+    SURVIVING files only; files rewritten or added outside the
+    partitioned write path have no partition entry and the pruning
+    pass keeps them (conservative, never wrong). CHECK constraints and
+    generated-column derivations are the TABLE's contract and ride
+    every commit verbatim — DML paths carry them without re-validating
+    rewritten rows; :func:`verify_table` ``deep=True`` is the
+    documented backstop."""
+    if src is None:
+        return {"schema": None, "dv_files": []}
     keep = set(files)
-    return {
-        "partition_cols": base["partition_cols"],
-        "partitions": {
-            f: v
-            for f, v in (base.get("partitions") or {}).items()
-            if f in keep
-        },
+    body = {
+        "schema": src.get("schema"),
+        "dv_files": list(src.get("dv_files") or []),
+        **_carried_mapping(src),
     }
-
-
-def _carried_generated(base: dict | None) -> dict:
-    """Manifest generated-column field for a child commit — recorded
-    derivations ride every commit verbatim, same policy (and same
-    deep-FSCK backstop) as CHECK constraints."""
-    if not base or not base.get("generated_cols"):
-        return {}
-    return {"generated_cols": dict(base["generated_cols"])}
-
-
-def _carried_constraints(base: dict | None) -> dict:
-    """Manifest constraint field for a child commit: the recorded CHECK
-    set is the TABLE's contract and rides every commit verbatim. DML
-    paths carry it without re-validating their rewritten rows (an
-    UPDATE assignment could in principle break a CHECK) —
-    :func:`verify_table` ``deep=True`` is the documented backstop."""
-    if not base or not base.get("constraints"):
-        return {}
-    return {"constraints": dict(base["constraints"])}
+    for cols, per_file in (("stats_cols", "stats"), ("partition_cols", "partitions")):
+        if src.get(cols):
+            body[cols] = src[cols]
+            body[per_file] = {
+                f: e for f, e in (src.get(per_file) or {}).items() if f in keep
+            }
+    for key in ("constraints", "generated_cols"):
+        if src.get(key):
+            body[key] = dict(src[key])
+    return body
 
 
 def _partition_candidates(m: dict, scope: dict | None) -> list[str] | None:
@@ -1481,6 +1434,57 @@ def _scoped_cond(predicate, partition_scope: dict | None):
             "DML needs a predicate, a partition_scope, or both"
         )
     return cond
+
+
+def _check_staged(
+    reader, files: Sequence[str], constraints: dict, gen_validate: list
+) -> int:
+    """Row count of a staged increment, with enforcement riding the same
+    pass: ONE aggregation yields the count, every CHECK constraint's
+    violations (FALSE **or NULL** violates — SQL CHECK semantics) and
+    every caller-supplied generated column's mismatches against its
+    ``(name, expr)`` derivation in ``gen_validate`` (a wrong ``dt``
+    would silently corrupt partition pruning). Any violation refuses
+    the commit; the transaction's abort removes the staging."""
+    from pyspark.sql import functions as F
+
+    cc_items = sorted(constraints.items())
+    aggs = [F.count(F.lit(1)).alias("__n")] + [
+        F.sum(F.when(F.coalesce(F.expr(cexpr), F.lit(False)), 0).otherwise(1))
+        .cast("long")
+        .alias(f"__viol_{i}")
+        for i, (_, cexpr) in enumerate(cc_items)
+    ] + [
+        F.sum(F.when(F.col(gname).eqNullSafe(F.expr(gexpr)), 0).otherwise(1))
+        .cast("long")
+        .alias(f"__gen_{i}")
+        for i, (gname, gexpr) in enumerate(gen_validate)
+    ]
+    row = reader.parquet(*files).agg(*aggs).first()
+    bad = {
+        c: int(row[f"__viol_{i}"])
+        for i, (c, _) in enumerate(cc_items)
+        if row[f"__viol_{i}"]
+    }
+    gen_bad = {
+        g: int(row[f"__gen_{i}"])
+        for i, (g, _) in enumerate(gen_validate)
+        if row[f"__gen_{i}"]
+    }
+    msgs = []
+    if bad:
+        msgs.append(
+            f"CHECK constraint violation: {bad} (constraints: "
+            f"{ {c: constraints[c] for c in bad} })"
+        )
+    if gen_bad:
+        msgs.append(
+            f"generated-column mismatch: {gen_bad} (derivations: "
+            f"{ {g: dict(gen_validate)[g] for g in gen_bad} })"
+        )
+    if msgs:
+        raise ValueError("commit refused, nothing staged — " + "; ".join(msgs))
+    return row["__n"]
 
 
 def write_version(
@@ -1640,7 +1644,10 @@ def write_version(
     is empty and the change stream passes the commit with zero rows).
     The DML paths stage their own change sets from a boolean flag; this
     parameter is the low-level hook for orchestrators that already
-    know theirs.
+    know theirs. An overwrite that records a change set (this list or
+    ``record_changes``) pins the version it was computed against: a
+    concurrent commit raises :class:`CommitConflict` instead of
+    rebasing, since the recorded set would describe the wrong prior.
 
     ``record_changes=True``: the commit COMPUTES and records its own
     change set (mutually exclusive with ``change_files``). An append
@@ -1664,22 +1671,24 @@ def write_version(
         )
     if (txn_app is None) != (txn_version is None):
         raise ValueError("txn_app and txn_version come together")
-    head0 = 0
+    txn = _Txn(
+        spark, table_dir, None if _version_numbers(table_dir, branch) else 0,
+        branch,
+    )
+    head_m = txn.base
     if txn_app is not None:
         applied = _last_txn_version(table_dir, txn_app, branch)
         if applied is not None and int(txn_version) <= applied:
             # replay of an already-committed batch: indistinguishable
             # success, nothing staged
             return _version_numbers(table_dir, branch)[-1]
-        nums0 = _version_numbers(table_dir, branch)
-        head0 = nums0[-1] if nums0 else 0
     if branch is not None:
         if index_cols:
             raise ValueError(
                 "index_cols on a branch commit — Bloom indexes are "
                 "main-lineage; build them when the branch publishes"
             )
-        if not _version_numbers(table_dir, branch):
+        if head_m is None:
             raise ValueError(
                 f"branch {branch!r} not found (have "
                 f"{sorted(branches(table_dir))}) — create_branch() first"
@@ -1687,17 +1696,7 @@ def write_version(
     # generated columns: explicit set when given ({} clears), else
     # inherited; DERIVE missing ones onto df before any schema check
     # or staging sees it (present ones validate in the staging agg)
-    nums_g = _version_numbers(table_dir, branch)
-    recorded_gen = dict(
-        (
-            _load_manifest(table_dir, nums_g[-1], branch).get(
-                "generated_cols"
-            )
-            if nums_g
-            else None
-        )
-        or {}
-    )
+    recorded_gen = dict((head_m or {}).get("generated_cols") or {})
     if generated_cols is None:
         eff_gen = recorded_gen
     else:
@@ -1727,30 +1726,21 @@ def write_version(
     # inherited stats_cols were validated at their own record time)
     _refuse_repeated_leaf(df.schema, stats_cols, "stats_cols")
     _refuse_repeated_leaf(df.schema, index_cols, "index_cols")
-    rc_base: dict | None = None
     rc_renames: dict[str, str] = {}
-    if mode == "append":
-        # fail-fast schema check against the current latest BEFORE any
-        # data stages; build() re-derives against the commit-time prior
-        nums = _version_numbers(table_dir, branch)
-        if nums:
-            prior_schema = _load_manifest(table_dir, nums[-1], branch).get(
-                "schema"
-            )
-            if prior_schema is not None:
-                _evolved_schema(prior_schema, df.schema, merge_schema)
+    schema_json = df.schema.json()
+    if mode == "append" and (head_m or {}).get("schema") is not None:
+        # schema-on-write against the snapshot, BEFORE any data stages
+        schema_json = _evolved_schema(head_m["schema"], df.schema, merge_schema)
     # effective partition columns: explicit list, else inherited from
     # the table's recorded layout (None = explicitly unpartitioned);
     # appends may not silently re-partition the table
     eff_part_by = list(partition_by) if partition_by else []
-    nums_pc = _version_numbers(table_dir, branch)
-    pc_m = _load_manifest(table_dir, nums_pc[-1], branch) if nums_pc else None
-    recorded_pc = list((pc_m or {}).get("partition_cols") or [])
+    recorded_pc = list((head_m or {}).get("partition_cols") or [])
     # the recorded layout (partition_cols + per-file value maps) is
     # keyed by frozen PHYSICAL names — rename_column never touches it;
     # the API speaks logical, so translate through the head mapping
-    _pc_logi = _logical_names(_col_mapping(pc_m))
-    _pc_phys = _phys_names(_col_mapping(pc_m))
+    _pc_logi = _logical_names(_col_mapping(head_m))
+    _pc_phys = _phys_names(_col_mapping(head_m))
     if partition_by is not None and not eff_part_by:
         eff_part_by = [_pc_logi.get(p, p) for p in recorded_pc]
     if (
@@ -1766,19 +1756,10 @@ def write_version(
         )
     if eff_part_by:
         _validate_partition_cols(df, eff_part_by)
-    commit_id = uuid.uuid4().hex
-    data_dir = os.path.join(table_dir, "data", commit_id)
     # effective CHECK constraints: explicit set when given ({} clears),
     # else inherited from the recorded contract (appends and OPTIMIZE
     # overwrites must not silently shed the table's invariants)
-    recorded_cc = dict(
-        (
-            _load_manifest(table_dir, nums_pc[-1], branch).get("constraints")
-            if nums_pc
-            else None
-        )
-        or {}
-    )
+    recorded_cc = dict((head_m or {}).get("constraints") or {})
     if check_constraints is None:
         eff_cc = recorded_cc
     else:
@@ -1794,17 +1775,13 @@ def write_version(
     # extend it (new columns get fresh field ids), overwrites rebuild
     # it carrying ids for persisting logical names; staged data files
     # store PHYSICAL names either way
-    head_m = _load_manifest(table_dir, nums_pc[-1], branch) if nums_pc else None
     if record_changes and mode == "overwrite" and head_m is not None:
-        # pin the base: the recorded delete set is computed against it,
-        # so a racing commit must CommitConflict, not rebase — and a
-        # reshaping overwrite (names OR types) has no well-defined
-        # row-level change set, so it refuses loudly BEFORE staging
-        # (an un-refused reshape would fail the change-set union later
-        # with the staging already on disk and unreclaimable)
-        rc_base = head_m
-        if rc_base.get("schema") is not None:
-            prior_list = json.loads(rc_base["schema"])["fields"]
+        # the recorded delete set is computed against the snapshot (the
+        # commit pins it) — and a reshaping overwrite (names OR types)
+        # has no well-defined row-level change set, so it refuses
+        # loudly BEFORE staging
+        if head_m.get("schema") is not None:
+            prior_list = json.loads(head_m["schema"])["fields"]
             new_list = json.loads(df.schema.json())["fields"]
             prior_fields = {f["name"]: f["type"] for f in prior_list}
             new_fields = {f["name"]: f["type"] for f in new_list}
@@ -1905,268 +1882,101 @@ def write_version(
         )
     else:
         eff_map = None
-    if eff_part_by:
-        try:
+    with txn:
+        data_dir = txn.stage("data")
+        if eff_part_by:
             new_files, new_parts = _stage_partitioned(
                 df, data_dir, eff_part_by, eff_map
             )
-        except ValueError:
-            import shutil
-
-            shutil.rmtree(data_dir, ignore_errors=True)
-            raise
-    else:
-        _to_physical(df, eff_map).write.parquet(data_dir)
-        new_files = sorted(
-            _canon(os.path.join(data_dir, f))
-            for f in os.listdir(data_dir)
-            if f.endswith(".parquet")
-        )
-        new_parts = {}
-    if new_files:
-        from pyspark.sql import functions as F
-
-        # constraint enforcement rides the row-count pass: ONE
-        # aggregation over the staged increment yields n_new and every
-        # per-constraint violation count (FALSE **or NULL** violates —
-        # SQL CHECK semantics)
-        cc_items = sorted(eff_cc.items())
-        aggs = [F.count(F.lit(1)).alias("__n")] + [
-            F.sum(
-                F.when(F.coalesce(F.expr(cexpr), F.lit(False)), 0).otherwise(1)
-            )
-            .cast("long")
-            .alias(f"__viol_{i}")
-            for i, (_, cexpr) in enumerate(cc_items)
-        ]
-        # caller-supplied generated columns validate in the same pass
-        # (a wrong dt would silently corrupt partition pruning)
-        aggs += [
-            F.sum(
-                F.when(F.col(gname).eqNullSafe(F.expr(gexpr)), 0).otherwise(1)
-            )
-            .cast("long")
-            .alias(f"__gen_{i}")
-            for i, (gname, gexpr) in enumerate(gen_validate)
-        ]
-        # mapped read when column mapping is on: staged files hold
-        # physical names, constraint/generated exprs logical ones
-        staged_reader = (
-            _recorded_reader(
-                spark,
-                {"schema": df.schema.json(), "column_mapping": eff_map},
-            )
-            if eff_map
-            else spark.read
-        )
-        row = staged_reader.parquet(*new_files).agg(*aggs).first()
-        n_new = row["__n"]
-        bad = {
-            cname: int(row[f"__viol_{i}"])
-            for i, (cname, _) in enumerate(cc_items)
-            if row[f"__viol_{i}"]
-        }
-        gen_bad = {
-            gname: int(row[f"__gen_{i}"])
-            for i, (gname, _) in enumerate(gen_validate)
-            if row[f"__gen_{i}"]
-        }
-        if bad or gen_bad:
-            _discard_staged(new_files)
-            msgs = []
-            if bad:
-                msgs.append(
-                    f"CHECK constraint violation: {bad} (constraints: "
-                    f"{ {c: eff_cc[c] for c in bad} })"
-                )
-            if gen_bad:
-                msgs.append(
-                    f"generated-column mismatch: {gen_bad} (derivations: "
-                    f"{ {g: eff_gen[g] for g in gen_bad} })"
-                )
-            raise ValueError(
-                "commit refused, nothing staged — " + "; ".join(msgs)
-            )
-    else:
+        else:
+            _to_physical(df, eff_map).write.parquet(data_dir)
+            new_files, new_parts = _part_files(data_dir), {}
         n_new = 0
-    staged_cf: list[str] | None = None
-    if record_changes:
-        from pyspark.sql import functions as F
-
-        pieces = []
         if new_files:
-            # read the STAGED files back (not df) so the recorded
-            # inserts are exactly the committed rows even under a
-            # nondeterministic incoming frame
-            rdr = (
+            # mapped read when column mapping is on: staged files hold
+            # physical names, constraint/generated exprs logical ones
+            n_new = _check_staged(
                 _recorded_reader(
-                    spark,
-                    {"schema": df.schema.json(), "column_mapping": eff_map},
+                    spark, {"schema": df.schema.json(), "column_mapping": eff_map}
                 )
                 if eff_map
-                else spark.read.schema(df.schema)
+                else spark.read,
+                new_files, eff_cc, gen_validate,
             )
-            pieces.append(
-                rdr.parquet(*new_files).withColumn(
-                    "_change_type", F.lit("insert")
-                )
-            )
-        if mode == "overwrite" and rc_base is not None and rc_base["files"]:
-            # the replaced snapshot's live rows leave the table; under
-            # a rename-overwrite they record under the NEW logical
-            # names (one field id, one name, across the whole feed)
-            gone = _live_scan(spark, rc_base)
-            if rc_renames:
-                gone = gone.select(
-                    *[
-                        _qcol(c).alias(rc_renames.get(c, c))
-                        for c in gone.columns
-                    ]
-                )
-            pieces.append(
-                gone.withColumn("_change_type", F.lit("delete"))
-            )
-        if pieces:
-            ch = pieces[0]
-            for p in pieces[1:]:
-                ch = ch.unionByName(p)
-            staged_cf = _write_change_files(spark, ch, table_dir, eff_map)
-        else:
-            staged_cf = []
-    schema_json = df.schema.json()
-    # stats columns: explicit, else inherited from the table's latest
-    # recorded list (coverage must not decay because one writer forgot)
-    eff_stats_cols = list(stats_cols)
-    if not eff_stats_cols:
-        nums_sc = _version_numbers(table_dir, branch)
-        if nums_sc:
-            eff_stats_cols = list(
-                _load_manifest(table_dir, nums_sc[-1], branch).get(
-                    "stats_cols"
-                )
-                or []
-            )
-    # footer envelopes are computed (and recorded) under PHYSICAL
-    # names/dotted paths — staged files store physicals, and the keys
-    # stay valid across any number of renames (physicals are frozen);
-    # a dotted stats col addresses a struct LEAF (``rating.average``)
-    new_stats = _stats_for_files(
-        spark, new_files, [_phys_path(eff_map, c) for c in eff_stats_cols]
-    )
+        staged_cf: list[str] | None = None
+        if record_changes:
+            from pyspark.sql import functions as F
 
-    def build(prior: dict | None) -> dict:
-        if txn_app is not None:
-            # race re-check, scoped to commits that landed AFTER the
-            # pre-stage check (the loser of a same-txn race rebuilds
-            # here and must not re-apply the winner's batch)
-            for rv in _version_numbers(table_dir, branch):
-                if rv <= head0:
-                    continue
-                t = _load_manifest(table_dir, rv, branch).get("txn")
-                if (
-                    t
-                    and t.get("app") == txn_app
-                    and int(t["version"]) >= int(txn_version)
-                ):
-                    raise _TxnAlreadyApplied(
-                        f"txn ({txn_app!r}, {txn_version}) already applied "
-                        f"by v{rv}"
+            pieces = []
+            if new_files:
+                # read the STAGED files back (not df) so the recorded
+                # inserts are exactly the committed rows even under a
+                # nondeterministic incoming frame
+                rdr = (
+                    _recorded_reader(
+                        spark,
+                        {"schema": df.schema.json(), "column_mapping": eff_map},
                     )
-        files, n_rows, schema = new_files, n_new, schema_json
-        dvs: list[str] = []
-        if mode == "append" and prior is not None:
-            files = prior["files"] + new_files
-            n_rows = prior["n_rows"] + n_new
-            # carried files keep needing their deletion vectors; an
-            # overwrite commits dv-free (its snapshot is exactly df —
-            # which is how compacting a MOR table folds DVs away)
-            dvs = prior.get("dv_files") or []
-            if prior.get("schema") is not None:
-                schema = _evolved_schema(
-                    prior["schema"], df.schema, merge_schema
+                    if eff_map
+                    else spark.read.schema(df.schema)
                 )
-        body = {
-            "mode": mode,
-            "files": files,
-            "n_rows": n_rows,
-            "schema": schema,
-            "dv_files": dvs,
-        }
-        if txn_app is not None:
-            body["txn"] = {"app": txn_app, "version": int(txn_version)}
-        if eff_stats_cols:
-            stats = dict(new_stats)
-            if mode == "append" and prior is not None:
-                # carried files keep their recorded envelopes by value
-                stats = {**(prior.get("stats") or {}), **new_stats}
-            body["stats_cols"] = eff_stats_cols
-            body["stats"] = stats
-        if eff_part_by:
-            parts = dict(new_parts)
-            if mode == "append" and prior is not None:
-                # carried files keep their recorded partition values
-                parts = {**(prior.get("partitions") or {}), **new_parts}
-            # recorded layout is PHYSICAL-keyed (frozen across renames)
-            _ppn = _phys_names(eff_map)
-            body["partition_cols"] = [
-                _ppn.get(c, c) for c in eff_part_by
-            ]
-            body["partitions"] = parts
-        if eff_cc:
-            body["constraints"] = eff_cc
-        if eff_gen:
-            body["generated_cols"] = eff_gen
-        if eff_map is not None:
-            body["column_mapping"] = eff_map
-        if change_files is not None:
-            body["change_files"] = list(change_files)
-        if staged_cf is not None:
-            if mode == "overwrite" and (
-                (prior["version"] if prior else 0)
-                != (rc_base["version"] if rc_base else 0)
-            ):
-                raise CommitConflict(
-                    "table advanced past "
-                    f"v{rc_base['version'] if rc_base else 0} while "
-                    "record_changes computed the overwrite's delete set "
-                    "— re-run the write"
+                pieces.append(
+                    rdr.parquet(*new_files).withColumn(
+                        "_change_type", F.lit("insert")
+                    )
                 )
-            body["change_files"] = staged_cf
-        return body
-
-    try:
-        v = _commit(table_dir, build, branch=branch)
-    except _TxnAlreadyApplied:
-        _discard_staged(new_files)
-        if staged_cf:
-            _discard_staged(staged_cf)
-        return _version_numbers(table_dir, branch)[-1]
-    except (ValueError, CommitConflict):
-        _discard_staged(new_files)
-        if staged_cf:
-            _discard_staged(staged_cf)
-        raise
-    for col in index_cols:
-        explicit = (index_geometry or {}).get(col)
-        if mode == "append" and v > 1:
-            # append carries prior files verbatim → index maintenance
-            # is O(increment): prior rows ∪ build over new files only
-            maintain_bloom_index(
-                spark, table_dir, col, version=v,
-                new_files=new_files, prior_version=v - 1,
-                max_chain=index_max_chain, geometry=explicit,
-            )
-        else:
-            geo = _resolve_index_geometry(
-                table_dir, _phys_path(eff_map, col), v - 1, explicit
-            )
-            if geo is None:
-                write_bloom_index(spark, table_dir, col, version=v)
+            if mode == "overwrite" and head_m is not None and head_m["files"]:
+                # the replaced snapshot's live rows leave the table; under
+                # a rename-overwrite they record under the NEW logical
+                # names (one field id, one name, across the whole feed)
+                gone = _live_scan(spark, head_m)
+                if rc_renames:
+                    gone = gone.select(
+                        *[
+                            _qcol(c).alias(rc_renames.get(c, c))
+                            for c in gone.columns
+                        ]
+                    )
+                pieces.append(
+                    gone.withColumn("_change_type", F.lit("delete"))
+                )
+            if pieces:
+                ch = pieces[0]
+                for p in pieces[1:]:
+                    ch = ch.unionByName(p)
+                staged_cf = txn.write_changes(ch, eff_map)
             else:
-                write_bloom_index(
-                    spark, table_dir, col, version=v, m_bits=geo[0], k=geo[1]
-                )
-    return v
+                staged_cf = []
+        # stats columns: explicit, else inherited from the table's latest
+        # recorded list (coverage must not decay because one writer forgot)
+        eff_stats_cols = list(stats_cols) or list(
+            (head_m or {}).get("stats_cols") or []
+        )
+        return txn.commit(
+            mode,
+            new_files=new_files,
+            row_delta=n_new,
+            new_parts=new_parts if eff_part_by else None,
+            index_cols=index_cols,
+            index_geometry=index_geometry,
+            index_max_chain=index_max_chain,
+            schema=schema_json,
+            txn=(
+                {"app": txn_app, "version": int(txn_version)}
+                if txn_app is not None
+                else None
+            ),
+            stats_cols=eff_stats_cols or None,
+            # recorded layout is PHYSICAL-keyed (frozen across renames)
+            partition_cols=[_phys_names(eff_map).get(c, c) for c in eff_part_by]
+            or None,
+            constraints=eff_cc or None,
+            generated_cols=eff_gen or None,
+            column_mapping=eff_map,
+            change_files=(
+                list(change_files) if change_files is not None else staged_cf
+            ),
+        )
 
 
 def _commit(
@@ -2174,15 +1984,15 @@ def _commit(
     build: Callable[[dict | None], dict],
     branch: str | None = None,
 ) -> int:
-    """Atomic manifest commit. ``build(prior_manifest_or_None)`` returns
-    the manifest body (``mode``/``files``/``n_rows``) computed against
-    the CURRENT latest version; the commit point is ``os.link`` of a
-    fully-written temp file onto the final v{N} path — link fails with
-    EEXIST if another writer won the version number (the loser loops
-    and rebuilds against the longer chain), and readers can never
-    observe a half-written manifest because content is durable before
-    the name exists. ``build`` may raise :class:`CommitConflict` to
-    abort instead of rebasing (copy-on-write ops do). ``branch``
+    """The manifest link loop — called only by :meth:`_Txn.commit`.
+    ``build(prior_manifest_or_None)`` returns the manifest body
+    computed against the CURRENT latest version; the commit point is
+    ``os.link`` of a fully-written temp file onto the final v{N} path —
+    link fails with EEXIST if another writer won the version number
+    (the loser loops and rebuilds against the longer chain), and
+    readers can never observe a half-written manifest because content
+    is durable before the name exists. ``build`` raises
+    :class:`CommitConflict` to abort instead of rebasing. ``branch``
     commits into that branch's own chain with identical atomicity."""
     os.makedirs(_manifest_root(table_dir, branch), exist_ok=True)
     while True:
@@ -2194,6 +2004,265 @@ def _commit(
         if not _atomic_link_json(_manifest_path(table_dir, next_v, branch), manifest):
             continue  # lost the race — rebuild against the new chain
         return next_v
+
+
+class _Txn:
+    """One versioned-table write — the module's single commit path (the
+    optimistic transaction of Delta Lake, Armbrust et al., VLDB 2020).
+    Every write runs the same steps, in order:
+
+    1. the constructor reads the snapshot ONCE (``base``): ``version``
+       (default latest) on ``branch``; ``version=0`` is the empty table
+       before v1, for writes that carry nothing from this chain;
+    2. :meth:`stage` (and :meth:`write_data` / :meth:`write_dv` /
+       :meth:`write_changes` on top of it) registers every staging
+       directory under ``data/``, ``_dv/`` and ``_change_data/``;
+    3. :meth:`commit` carries the snapshot's files and metadata forward
+       by default (:func:`_carry`) — the operation passes only what it
+       changes;
+    4. the conflict rule comes from the operation's ``mode``: appends
+       and plain overwrites (no recorded change set) rebase onto the
+       latest version, ``publish`` fast-forwards only from ``pin`` (or
+       over its own earlier publish), and every other mode pins the
+       snapshot — a newer version raises :class:`CommitConflict`;
+    5. used as a context manager, an exception anywhere before
+       :meth:`commit` returns removes every registered staging: nothing
+       references it, and vacuum never sweeps ``data/``;
+    6. after the manifest link, the Bloom indexes for ``index_cols``
+       chain onto the carried snapshot's index or rebuild.
+    """
+
+    def __init__(
+        self,
+        spark: SparkSession | None,
+        table_dir: str,
+        version: int | None = None,
+        branch: str | None = None,
+        pin: int | None = None,
+    ):
+        self.spark, self.table_dir, self.branch = spark, table_dir, branch
+        self.base = (
+            None if version == 0 else _load_manifest(table_dir, version, branch)
+        )
+        self.pin = pin if pin is not None else (self.base or {}).get("version", 0)
+        self.staged: list[str] = []
+        self.version: int | None = None
+        self.indexed: dict[str, str] = {}
+
+    def __enter__(self) -> _Txn:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        if self.version is None:
+            for d in self.staged:
+                shutil.rmtree(d, ignore_errors=True)
+
+    def stage(self, kind: str) -> str:
+        """A fresh staging directory under ``kind`` (``data``, ``_dv``,
+        ``_change_data``), removed again if the write aborts."""
+        out = os.path.join(self.table_dir, kind, uuid.uuid4().hex)
+        self.staged.append(out)
+        return out
+
+    def write_data(
+        self, df: DataFrame, mapping: dict | None = None
+    ) -> tuple[list[str], int]:
+        """Stage ``df`` under a fresh ``data/`` directory; return (file
+        list, row count). ``mapping``: stage under PHYSICAL names
+        (column mapping — see :func:`_to_physical`).
+
+        A ZERO-row frame stages nothing: Spark emits one empty part file
+        to carry the schema, but recording it would cost a dead file in
+        the manifest forever — carried through every later commit,
+        probed by every stats/Bloom pass (an empty file has no row
+        groups, so it degrades covered reads to a footer pass) — and the
+        manifest's own ``schema`` JSON already carries the schema for
+        file-less snapshots, which every reader handles. The common
+        producer is the partition-DML form (``delete_version(
+        predicate=None, partition_scope=...)``: every scanned row dies,
+        zero survivors)."""
+        data_dir = self.stage("data")
+        _to_physical(df, mapping).write.parquet(data_dir)
+        files = _part_files(data_dir)
+        n = self.spark.read.parquet(data_dir).count() if files else 0
+        if files and n == 0:
+            shutil.rmtree(data_dir, ignore_errors=True)
+            return [], 0
+        return files, n
+
+    def write_dv(self, matched: DataFrame) -> tuple[list[str], int]:
+        """Stage the deletion-vector sidecar for ``matched``'s physical
+        row identity (``__dv_file``/``__dv_pos``); return (sidecar
+        files, rows deleted). Nothing matched stages nothing, so reads
+        never pay an anti-join for a no-op."""
+        from pyspark.sql import functions as F
+
+        dv_dir = self.stage(_DV_DIR)
+        matched.select(
+            F.col(_DV_FILE).alias("file"), F.col(_DV_POS).alias("pos")
+        ).write.parquet(dv_dir)
+        n = self.spark.read.parquet(dv_dir).count()
+        if n == 0:
+            shutil.rmtree(dv_dir, ignore_errors=True)
+            return [], 0
+        return _part_files(dv_dir), n
+
+    def write_changes(
+        self, changes: DataFrame, mapping: dict | None = None
+    ) -> list[str]:
+        """Stage the commit's change set (:func:`_write_change_files`)
+        under a fresh registered ``_change_data/`` directory."""
+        return _write_change_files(
+            self.spark, changes, self.table_dir, mapping,
+            out=self.stage(_CHANGE_DIR),
+        )
+
+    def _check(self, mode: str, prior: dict | None, fields: dict) -> None:
+        """Step 4: may this commit land on ``prior``?"""
+        cur = prior["version"] if prior else 0
+        if cur == self.pin:
+            return
+        t = fields.get("txn")
+        newer = _version_numbers(self.table_dir, self.branch) if t else []
+        for rv in (v for v in newer if v > self.pin):
+            # idempotent writes: a racing writer already landed this
+            # (txn_app, txn_version) — the replay unwinds as a skip
+            seen = _load_manifest(self.table_dir, rv, self.branch).get("txn")
+            if (
+                seen
+                and seen.get("app") == t["app"]
+                and int(seen["version"]) >= t["version"]
+            ):
+                raise _TxnAlreadyApplied(f"txn {t} already applied by v{rv}")
+        if mode == "publish":
+            # self-heal the crash window between a publish's main commit
+            # and its published.json update: main's latest being OUR OWN
+            # earlier publish is a valid fast-forward base. Matched on
+            # the fork INCARNATION id, not the name: a deleted-and-
+            # re-forked branch must not fast-forward over commits the
+            # new incarnation never saw
+            fork = fields["published_fork"]
+            if fork is None or (prior or {}).get("published_fork") != fork:
+                raise CommitConflict(
+                    f"main is at v{cur} but branch "
+                    f"{fields['published_branch']!r} is based on "
+                    f"v{self.pin} — fast-forward publish refused; re-create "
+                    "the branch from current main to pick up the new commits"
+                )
+            return
+        if mode == "append":
+            # a rebased append keeps the schema and mapping it computed
+            # against the snapshot; a concurrent change to either is a
+            # conflict, never a silent narrowing
+            if (prior.get("schema"), _col_mapping(prior)) != (
+                (self.base or {}).get("schema"),
+                _col_mapping(self.base),
+            ):
+                raise CommitConflict(
+                    f"table schema changed since v{self.pin} (latest: "
+                    f"v{cur}) — re-run the append"
+                )
+            return
+        if mode == "overwrite" and fields.get("change_files") is None:
+            return
+        raise CommitConflict(
+            f"table advanced past v{self.pin} (latest: v{cur}) — re-run "
+            f"the {mode}"
+        )
+
+    def commit(
+        self,
+        mode: str,
+        keep: Sequence[str] | None = None,
+        new_files: Sequence[str] = (),
+        row_delta: int = 0,
+        carry: dict | None = None,
+        new_parts: dict | None = None,
+        index_cols: Sequence[str] = (),
+        index_geometry: dict[str, tuple[int, int]] | None = None,
+        index_max_chain: int = 8,
+        **fields,
+    ) -> int:
+        """Commit the next version and return its number.
+
+        The manifest carries ``carry`` (default: the version the commit
+        lands on; an overwrite carries nothing): its files in ``keep``
+        (default all) followed by ``new_files``, its row count plus
+        ``row_delta``, and its metadata (:func:`_carry`). ``new_files`` get
+        fresh stats envelopes (one footer pass) and ``new_parts`` their
+        partition values. ``fields`` override manifest keys; ``None``
+        removes one. A racing writer that already applied the same
+        ``txn`` makes the commit a silent skip that returns the latest
+        version."""
+        fresh: dict | None = None
+        done: dict = {}
+
+        def build(prior: dict | None) -> dict:
+            nonlocal fresh
+            self._check(mode, prior, fields)
+            src = carry if carry is not None else (
+                None if mode == "overwrite" else prior
+            )
+            kept = keep if keep is not None else (src["files"] if src else [])
+            files = list(kept) + list(new_files)
+            body = {
+                "mode": mode,
+                "files": files,
+                "n_rows": (src["n_rows"] if src else 0) + row_delta,
+                **_carry(src, files),
+            }
+            if new_parts is not None:
+                body["partitions"] = {**body.get("partitions", {}), **new_parts}
+            cols = fields.get("stats_cols", body.get("stats_cols"))
+            if cols and "stats" not in fields:
+                if fresh is None:
+                    # recorded envelopes are keyed by PHYSICAL column
+                    # name/dotted path (what the staged files store —
+                    # frozen across renames); stats_cols stays logical
+                    cm = fields.get("column_mapping", _col_mapping(body))
+                    fresh = _stats_for_files(
+                        self.spark, list(new_files),
+                        [_phys_path(cm, c) for c in cols],
+                    )
+                body["stats"] = {**body.get("stats", {}), **fresh}
+            for k, val in fields.items():
+                if val is None:
+                    body.pop(k, None)
+                else:
+                    body[k] = val
+            done.update(src=src, body=body)
+            return body
+
+        try:
+            v = _commit(self.table_dir, build, self.branch)
+        except _TxnAlreadyApplied:
+            return _version_numbers(self.table_dir, self.branch)[-1]
+        self.version = v
+        src, cm = done["src"], _col_mapping(done["body"])
+        for col in index_cols:
+            explicit = (index_geometry or {}).get(col)
+            kphys = _phys_path(cm, col)
+            if src is not None and _resolve_probe_index(
+                self.table_dir, src, kphys
+            ):
+                # the commit carries src's files: chain onto its index,
+                # hashing only the increment (O(increment))
+                maintain_bloom_index(
+                    self.spark, self.table_dir, col, version=v,
+                    new_files=list(new_files), prior_version=src["version"],
+                    max_chain=index_max_chain, geometry=explicit,
+                )
+                self.indexed[col] = "chained"
+            else:
+                # full rebuild, at the explicit geometry, else the one
+                # the table last recorded, else library defaults
+                geo = _resolve_index_geometry(self.table_dir, kphys, v - 1, explicit)
+                write_bloom_index(
+                    self.spark, self.table_dir, col, version=v,
+                    **({} if geo is None else {"m_bits": geo[0], "k": geo[1]}),
+                )
+                self.indexed[col] = "rebuilt"
+        return v
 
 
 def _local_path(uri: str) -> str:
@@ -2218,52 +2287,6 @@ def _carried_files(base_files: Sequence[str], touched: set[str]) -> list[str]:
             "duplicating rows"
         )
     return [f for c, f in canon_base.items() if c not in touched]
-
-
-def _discard_staged(files: Sequence[str]) -> None:
-    """Remove a conflict-aborted commit's staged data subdirectory —
-    nothing references it (the manifest never committed) and vacuum()
-    only sweeps files dropped manifests reference, so without this the
-    orphans would never be reclaimable."""
-    import shutil
-
-    if files:
-        shutil.rmtree(os.path.dirname(files[0]), ignore_errors=True)
-
-
-def _write_data_files(
-    spark: SparkSession,
-    df: DataFrame,
-    table_dir: str,
-    mapping: dict | None = None,
-) -> tuple[list[str], int]:
-    """Stage ``df`` under a fresh immutable commit subdirectory; return
-    (file list, row count). ``mapping``: stage under PHYSICAL names
-    (column mapping — see :func:`_to_physical`).
-
-    A ZERO-row frame stages nothing: Spark emits one empty part file
-    to carry the schema, but recording it would cost a dead file in
-    the manifest forever — carried through every later commit, probed
-    by every stats/Bloom pass (an empty file has no row groups, so it
-    degrades covered reads to a footer pass) — and the manifest's own
-    ``schema`` JSON already carries the schema for file-less
-    snapshots, which every reader handles. The common producer is the
-    partition-DML form (``delete_version(predicate=None,
-    partition_scope=...)``: every scanned row dies, zero survivors)."""
-    data_dir = os.path.join(table_dir, "data", uuid.uuid4().hex)
-    _to_physical(df, mapping).write.parquet(data_dir)
-    files = sorted(
-        _canon(os.path.join(data_dir, f))
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
-    )
-    n = spark.read.parquet(data_dir).count() if files else 0
-    if files and n == 0:
-        import shutil
-
-        shutil.rmtree(data_dir, ignore_errors=True)
-        return [], 0
-    return files, n
 
 
 def merge_version(
@@ -2391,7 +2414,8 @@ def merge_version(
         if change_files:
             result["change_files_added"] = len(m.get("change_files") or [])
         return result
-    base = _load_manifest(table_dir, base_version)
+    txn = _Txn(spark, table_dir, base_version)
+    base = txn.base
     _refuse_repeated_leaf_m(base, index_cols, "index_cols")
     # schema-on-write (same gate as write_version's append): refuse a
     # divergent increment unless merge_schema=True, then conform BOTH
@@ -2483,70 +2507,39 @@ def merge_version(
         # committed data files and the recorded change set — order_by
         # ties (row_number nondeterminism) must not let them diverge
         merged = merged.persist()
-    try:
-        new_files, n_new = _write_data_files(spark, merged, table_dir, eff_map)
-        if change_files:
-            # the commit's exact change set = NET multiset diff of the
-            # touched files' old live rows vs their merged replacement
-            # (carried files contribute nothing by construction) — the
-            # same netting read_changes' fallback computes, recorded at
-            # commit time over O(touched + increment) rows only
-            signed = merged.withColumn("__cdf_delta", F.lit(1))
-            if old_rows is not None:
-                signed = signed.unionByName(
-                    old_rows.withColumn("__cdf_delta", F.lit(-1))
+    with txn:
+        try:
+            new_files, n_new = txn.write_data(merged, eff_map)
+            if change_files:
+                # the commit's exact change set = NET multiset diff of the
+                # touched files' old live rows vs their merged replacement
+                # (carried files contribute nothing by construction) — the
+                # same netting read_changes' fallback computes, recorded at
+                # commit time over O(touched + increment) rows only
+                signed = merged.withColumn("__cdf_delta", F.lit(1))
+                if old_rows is not None:
+                    signed = signed.unionByName(
+                        old_rows.withColumn("__cdf_delta", F.lit(-1))
+                    )
+                cf = txn.write_changes(
+                    _net_change_rows(signed, list(merged.columns)), eff_map
                 )
-            cf = _write_change_files(
-                spark,
-                _net_change_rows(signed, list(merged.columns)),
-                table_dir,
-                eff_map,
-            )
-    finally:
-        if change_files:
-            merged.unpersist()
-    schema_json = merged.schema.json()
-
-    def build(prior: dict | None) -> dict:
-        if prior is None or prior["version"] != base["version"]:
-            raise CommitConflict(
-                f"table advanced past v{base['version']} "
-                f"(latest: v{prior['version'] if prior else 0}) — re-run the merge"
-            )
-        body = {
-            "mode": "merge",
-            "files": carried + new_files,
-            "n_rows": base["n_rows"] - n_touched + n_new,
-            "schema": schema_json,
-            **({"column_mapping": eff_map} if eff_map else {}),
-            **_carried_stats(spark, base, carried + new_files, new_files),
-            **_carried_partitions(base, carried + new_files),
-            **_carried_constraints(base),
-            **_carried_generated(base),
-            # carried files keep needing their DVs; entries addressing
-            # the rewritten files go stale-but-harmless (fresh uuid
-            # paths never reuse a dead identity) — compaction reclaims
-            "dv_files": base.get("dv_files") or [],
-        }
-        if cf is not None:
-            body["change_files"] = cf
-        return body
-
-    try:
-        v = _commit(table_dir, build)
-    except CommitConflict:
-        _discard_staged(new_files)
-        if cf:
-            _discard_staged(cf)
-        raise
-    for col in index_cols:
+        finally:
+            if change_files:
+                merged.unpersist()
         # copy-on-write commit: carried files keep their prior index
         # rows, only the rewritten increment is hashed
-        maintain_bloom_index(
-            spark, table_dir, col, version=v,
-            new_files=new_files, prior_version=base["version"],
-            max_chain=index_max_chain,
-            geometry=(index_geometry or {}).get(col),
+        v = txn.commit(
+            "merge",
+            keep=carried,
+            new_files=new_files,
+            row_delta=n_new - n_touched,
+            index_cols=index_cols,
+            index_geometry=index_geometry,
+            index_max_chain=index_max_chain,
+            schema=merged.schema.json(),
+            column_mapping=eff_map,
+            change_files=cf,
         )
     result = {
         "version": v,
@@ -2627,7 +2620,8 @@ def delete_version(
     if mode not in ("cow", "mor"):
         raise ValueError(f"mode must be cow|mor, got {mode!r}")
     cond = _scoped_cond(predicate, partition_scope)
-    base = _load_manifest(table_dir, base_version)
+    txn = _Txn(spark, table_dir, base_version)
+    base = txn.base
     _refuse_repeated_leaf_m(base, index_cols, "index_cols")
     cand = _partition_candidates(base, partition_scope)
     scan_files = base["files"] if cand is None else cand
@@ -2672,80 +2666,47 @@ def delete_version(
             else []
         )
         cf = []
-    if touched and change_files:
-        # ONE evaluation of the predicate, materialized as a match
-        # column and PERSISTED, feeds both the kept-row data files and
-        # the recorded delete set — a nondeterministic predicate must
-        # not let the recorded change set diverge from the committed
-        # snapshot (same rule as update_version's persisted images)
-        scope = _live_scan(spark, base, files=sorted(touched)).withColumn(
-            "__del_match", F.coalesce(cond, F.lit(False))
-        ).persist()
-        try:
+    with txn:
+        if touched and change_files:
+            # ONE evaluation of the predicate, materialized as a match
+            # column and PERSISTED, feeds both the kept-row data files and
+            # the recorded delete set — a nondeterministic predicate must
+            # not let the recorded change set diverge from the committed
+            # snapshot (same rule as update_version's persisted images)
+            scope = _live_scan(spark, base, files=sorted(touched)).withColumn(
+                "__del_match", F.coalesce(cond, F.lit(False))
+            ).persist()
+            try:
+                n_touched = scope.count()
+                kept = scope.filter(~F.col("__del_match")).drop("__del_match")
+                new_files, n_new = txn.write_data(kept, _col_mapping(base))
+                deleted_rows = (
+                    scope.filter(F.col("__del_match"))
+                    .drop("__del_match")
+                    .withColumn("_change_type", F.lit("delete"))
+                )
+                cf = txn.write_changes(deleted_rows, _col_mapping(base))
+            finally:
+                scope.unpersist()
+        elif touched:
+            scope = _live_scan(spark, base, files=sorted(touched))
             n_touched = scope.count()
-            kept = scope.filter(~F.col("__del_match")).drop("__del_match")
-            new_files, n_new = _write_data_files(
-                spark, kept, table_dir, _col_mapping(base)
-            )
-            deleted_rows = (
-                scope.filter(F.col("__del_match"))
-                .drop("__del_match")
-                .withColumn("_change_type", F.lit("delete"))
-            )
-            cf = _write_change_files(
-                spark, deleted_rows, table_dir, _col_mapping(base)
-            )
-        finally:
-            scope.unpersist()
-    elif touched:
-        scope = _live_scan(spark, base, files=sorted(touched))
-        n_touched = scope.count()
-        kept = scope.filter(~F.coalesce(cond, F.lit(False)))
-        new_files, n_new = _write_data_files(
-            spark, kept, table_dir, _col_mapping(base)
-        )
-    else:
-        n_touched, new_files, n_new = 0, [], 0
-
-    def build(prior: dict | None) -> dict:
-        if prior is None or prior["version"] != base["version"]:
-            raise CommitConflict(
-                f"table advanced past v{base['version']} "
-                f"(latest: v{prior['version'] if prior else 0}) — re-run the delete"
-            )
-        body = {
-            "mode": "delete",
-            "files": carried + new_files,
-            "n_rows": base["n_rows"] - n_touched + n_new,
-            "schema": schema_json,
-            **_carried_mapping(base),
-            **_carried_stats(spark, base, carried + new_files, new_files),
-            **_carried_partitions(base, carried + new_files),
-            **_carried_constraints(base),
-            **_carried_generated(base),
-            # carried files keep their DVs; rewritten files' entries go
-            # stale-but-harmless (see merge_version)
-            "dv_files": base.get("dv_files") or [],
-        }
-        if cf is not None:
-            body["change_files"] = cf
-        return body
-
-    try:
-        v = _commit(table_dir, build)
-    except CommitConflict:
-        _discard_staged(new_files)
-        if cf:
-            _discard_staged(cf)
-        raise
-    for col in index_cols:
+            kept = scope.filter(~F.coalesce(cond, F.lit(False)))
+            new_files, n_new = txn.write_data(kept, _col_mapping(base))
+        else:
+            n_touched, new_files, n_new = 0, [], 0
         # copy-on-write commit: carried files keep their prior index
         # rows, only the rewritten increment is hashed
-        maintain_bloom_index(
-            spark, table_dir, col, version=v,
-            new_files=new_files, prior_version=base["version"],
-            max_chain=index_max_chain,
-            geometry=(index_geometry or {}).get(col),
+        v = txn.commit(
+            "delete",
+            keep=carried,
+            new_files=new_files,
+            row_delta=n_new - n_touched,
+            index_cols=index_cols,
+            index_geometry=index_geometry,
+            index_max_chain=index_max_chain,
+            schema=schema_json,
+            change_files=cf,
         )
     result = {
         "version": v,
@@ -2813,7 +2774,8 @@ def overwrite_partitions(
     ``"change_files_added"`` when ``change_files=True``)."""
     from pyspark.sql import functions as F
 
-    base = _load_manifest(table_dir, base_version)
+    txn = _Txn(spark, table_dir, base_version)
+    base = txn.base
     _refuse_repeated_leaf_m(base, index_cols, "index_cols")
     pcols = list(base.get("partition_cols") or [])
     if not pcols:
@@ -2834,10 +2796,6 @@ def overwrite_partitions(
             if gname not in df.columns:
                 df = df.withColumn(gname, F.expr(gen[gname]))
     if change_files:
-        # refuse BEFORE anything stages — every other pre-commit abort
-        # in this function discards its stagings, and vacuum's data
-        # sweep is manifest-driven (it can never reclaim an uncommitted
-        # staging this raise would otherwise leak)
         _refuse_change_clash(df.columns)
     if partition_scope is None:
         if len(p_logical) != 1:
@@ -2913,156 +2871,73 @@ def overwrite_partitions(
         else 0
     )
     rw_files: list[str] = []
-    rw_n = 0
-    n_unmapped_live = 0
-    if unmapped:
-        um = _live_scan(spark, base, files=sorted(unmapped))
-        n_unmapped_live = um.count()
-        keep = um.filter(~F.coalesce(scope_cond, F.lit(False)))
-        rw_files, rw_n = _write_data_files(
-            spark, keep, table_dir, _col_mapping(base)
-        )
-        n_replaced += n_unmapped_live - rw_n
-    # stage the replacement through the partitioned writer (map entries
-    # for the new files) and enforce the recorded CHECK contract
-    data_dir = os.path.join(table_dir, "data", uuid.uuid4().hex)
-    try:
-        new_files, new_parts = _stage_partitioned(
-            df, data_dir, p_logical, _col_mapping(base)
-        )
-    except ValueError:
-        # over-cardinality (or shadow-clash) raised AFTER the unmapped
-        # rewrite staged — discard both stagings, leak nothing
-        import shutil
-
-        shutil.rmtree(data_dir, ignore_errors=True)
-        _discard_staged(rw_files)
-        raise
-    n_new = 0
-    if new_files:
-        cc_items = sorted((base.get("constraints") or {}).items())
-        aggs = [F.count(F.lit(1)).alias("__n")] + [
-            F.sum(
-                F.when(F.coalesce(F.expr(cexpr), F.lit(False)), 0).otherwise(1)
-            )
-            .cast("long")
-            .alias(f"__viol_{i}")
-            for i, (_, cexpr) in enumerate(cc_items)
-        ] + [
-            F.sum(
-                F.when(F.col(gname).eqNullSafe(F.expr(gexpr)), 0).otherwise(1)
-            )
-            .cast("long")
-            .alias(f"__gen_{i}")
-            for i, (gname, gexpr) in enumerate(gen_validate)
-        ]
-        # mapped reader: staged files hold physical names, constraint
-        # exprs reference logical ones (identity read when unmapped)
-        row = (
-            _recorded_reader(spark, base)
-            .parquet(*new_files)
-            .agg(*aggs)
-            .first()
-        )
-        n_new = row["__n"]
-        bad = {
-            cname: int(row[f"__viol_{i}"])
-            for i, (cname, _) in enumerate(cc_items)
-            if row[f"__viol_{i}"]
-        }
-        gen_bad = {
-            gname: int(row[f"__gen_{i}"])
-            for i, (gname, _) in enumerate(gen_validate)
-            if row[f"__gen_{i}"]
-        }
-        if bad or gen_bad:
-            _discard_staged(new_files)
-            _discard_staged(rw_files)
-            raise ValueError(
-                "replace refused, nothing staged — CHECK/generated "
-                f"violations: { {**bad, **gen_bad} }"
-            )
-    files = carried + rw_files + new_files
-    cf: list[str] | None = None
-    if change_files:
-        cf = []
-        # outgoing rows: the dropped partitions' live rows (exactly the
-        # files being replaced) + unmapped in-scope live rows; incoming
-        # rows: the staged replacement (post-generated, exactly what
-        # commits). O(replaced + incoming), never O(table).
-        gone = None
-        if replaced:
-            gone = _live_scan(spark, base, files=sorted(replaced))
+    with txn:
         if unmapped:
-            um_gone = _live_scan(
-                spark, base, files=sorted(unmapped)
-            ).filter(F.coalesce(scope_cond, F.lit(False)))
-            gone = um_gone if gone is None else gone.unionByName(um_gone)
-        pieces = []
-        if gone is not None:
-            pieces.append(gone.withColumn("_change_type", F.lit("delete")))
-        if new_files:
-            # explicit leaf-file read (the shadow dir key is not
-            # inferred) via the mapped reader, so the piece joins the
-            # union in LOGICAL names like the live scans
-            pieces.append(
-                _recorded_reader(spark, base)
-                .parquet(*new_files)
-                .withColumn("_change_type", F.lit("insert"))
+            um = _live_scan(spark, base, files=sorted(unmapped))
+            n_unmapped_live = um.count()
+            keep = um.filter(~F.coalesce(scope_cond, F.lit(False)))
+            rw_files, rw_n = txn.write_data(keep, _col_mapping(base))
+            n_replaced += n_unmapped_live - rw_n
+        # stage the replacement through the partitioned writer (map
+        # entries for the new files) and enforce the recorded CHECK
+        # contract — mapped reader: staged files hold physical names,
+        # constraint exprs reference logical ones
+        new_files, new_parts = _stage_partitioned(
+            df, txn.stage("data"), p_logical, _col_mapping(base)
+        )
+        n_new = (
+            _check_staged(
+                _recorded_reader(spark, base), new_files,
+                base.get("constraints") or {}, gen_validate,
             )
-        if pieces:
-            changes = pieces[0]
-            for p in pieces[1:]:
-                changes = changes.unionByName(p, allowMissingColumns=True)
-            cf = _write_change_files(
-                spark, changes, table_dir, _col_mapping(base)
-            )
-
-    def build(prior: dict | None) -> dict:
-        if prior is None or prior["version"] != base["version"]:
-            raise CommitConflict(
-                f"table advanced past v{base['version']} — re-run the replace"
-            )
-        body = {
-            "mode": "replace_where",
-            "files": files,
-            "n_rows": base["n_rows"] - n_replaced + n_new,
-            "schema": base.get("schema"),
-            # carried files keep needing their DVs; entries addressing
-            # dropped/rewritten files go stale-but-harmless
-            "dv_files": base.get("dv_files") or [],
-            **_carried_mapping(base),
-            **_carried_stats(spark, base, files, rw_files + new_files),
-            **_carried_constraints(base),
-            **_carried_generated(base),
-        }
-        if cf is not None:
-            body["change_files"] = cf
-        parts = {
-            f: v for f, v in pmap.items() if f in {_canon(x) for x in carried}
-        }
-        body["partition_cols"] = pcols
-        body["partitions"] = {**parts, **new_parts}
-        return body
-
-    try:
-        v = _commit(table_dir, build)
-    except CommitConflict:
-        _discard_staged(new_files)
-        _discard_staged(rw_files)
-        if cf:
-            _discard_staged(cf)
-        raise
-    for col in index_cols:
+            if new_files
+            else 0
+        )
+        cf: list[str] | None = None
+        if change_files:
+            cf = []
+            # outgoing rows: the dropped partitions' live rows (exactly the
+            # files being replaced) + unmapped in-scope live rows; incoming
+            # rows: the staged replacement (post-generated, exactly what
+            # commits). O(replaced + incoming), never O(table).
+            gone = None
+            if replaced:
+                gone = _live_scan(spark, base, files=sorted(replaced))
+            if unmapped:
+                um_gone = _live_scan(
+                    spark, base, files=sorted(unmapped)
+                ).filter(F.coalesce(scope_cond, F.lit(False)))
+                gone = um_gone if gone is None else gone.unionByName(um_gone)
+            pieces = []
+            if gone is not None:
+                pieces.append(gone.withColumn("_change_type", F.lit("delete")))
+            if new_files:
+                # explicit leaf-file read (the shadow dir key is not
+                # inferred) via the mapped reader, so the piece joins the
+                # union in LOGICAL names like the live scans
+                pieces.append(
+                    _recorded_reader(spark, base)
+                    .parquet(*new_files)
+                    .withColumn("_change_type", F.lit("insert"))
+                )
+            if pieces:
+                changes = pieces[0]
+                for p in pieces[1:]:
+                    changes = changes.unionByName(p, allowMissingColumns=True)
+                cf = txn.write_changes(changes, _col_mapping(base))
         # carried files keep their prior index rows; only the commit's
         # rewritten + replacement files hash (O(increment), same
-        # contract as the COW DML paths). Rows indexed for dropped
-        # files go stale-but-harmless, as everywhere.
-        maintain_bloom_index(
-            spark, table_dir, col, version=v,
-            new_files=rw_files + new_files, prior_version=base["version"],
-            max_chain=index_max_chain,
-            geometry=(index_geometry or {}).get(col),
+        # contract as the COW DML paths)
+        v = txn.commit(
+            "replace_where",
+            keep=carried,
+            new_files=rw_files + new_files,
+            row_delta=n_new - n_replaced,
+            new_parts=new_parts,
+            index_cols=index_cols,
+            index_geometry=index_geometry,
+            index_max_chain=index_max_chain,
+            change_files=cf,
         )
     result = {
         "version": v,
@@ -3099,10 +2974,9 @@ def _delete_version_mor(
     MOR deletes natively from the sidecars, but a uniform change-file
     history lets :func:`read_changes` stay on its O(changed rows) fast
     path across every commit in a range)."""
-    import shutil
-
     from pyspark.sql import functions as F
 
+    txn = _Txn(spark, table_dir, base["version"])
     cf: list[str] | None = None
     if change_files:
         sch = base.get("schema")
@@ -3112,90 +2986,44 @@ def _delete_version_mor(
         cf = []
     dv_new: list[str] = []
     n_deleted = 0
-    dv_dir = None
     scoped = list(base["files"] if scan_files is None else scan_files)
-    if scoped:
-        # existing DVs applied: a row deleted by a PRIOR MOR commit
-        # must not be re-recorded (double-decrementing n_rows); the
-        # scan is scoped to the partition candidates when the caller
-        # passed a partition_scope (out-of-scope files can't match the
-        # scoped predicate by construction)
-        live = _live_scan(spark, base, files=sorted(scoped), identity=True)
-        hit = live.filter(cond)
-        if change_files:
-            # one scan feeds two writes (DV coordinates + change rows)
-            hit = hit.persist()
-        try:
-            matched = hit.select(
-                F.col(_DV_FILE).alias("file"), F.col(_DV_POS).alias("pos")
-            )
-            dv_dir = os.path.join(table_dir, _DV_DIR, uuid.uuid4().hex)
-            matched.write.parquet(dv_dir)
-            dv_new = sorted(
-                _canon(os.path.join(dv_dir, f))
-                for f in os.listdir(dv_dir)
-                if f.endswith(".parquet")
-            )
-            n_deleted = spark.read.parquet(dv_dir).count()
-            if n_deleted == 0:
-                # nothing matched: drop the staged empty sidecar so reads
-                # never pay an anti-join for a no-op delete
-                shutil.rmtree(dv_dir, ignore_errors=True)
-                dv_new, dv_dir = [], None
-            elif change_files:
-                cf = _write_change_files(
-                    spark,
-                    hit.drop(_DV_FILE, _DV_POS).withColumn(
-                        "_change_type", F.lit("delete")
-                    ),
-                    table_dir,
-                    _col_mapping(base),
-                )
-        finally:
+    with txn:
+        if scoped:
+            # existing DVs applied: a row deleted by a PRIOR MOR commit
+            # must not be re-recorded (double-decrementing n_rows); the
+            # scan is scoped to the partition candidates when the caller
+            # passed a partition_scope (out-of-scope files can't match
+            # the scoped predicate by construction)
+            live = _live_scan(spark, base, files=sorted(scoped), identity=True)
+            hit = live.filter(cond)
             if change_files:
-                hit.unpersist()
-
-    def build(prior: dict | None) -> dict:
-        if prior is None or prior["version"] != base["version"]:
-            raise CommitConflict(
-                f"table advanced past v{base['version']} "
-                f"(latest: v{prior['version'] if prior else 0}) — re-run the delete"
-            )
-        body = {
-            "mode": "delete_mor",
-            "files": base["files"],
-            "n_rows": base["n_rows"] - n_deleted,
-            "schema": base.get("schema"),
-            "dv_files": (base.get("dv_files") or []) + dv_new,
-            **_carried_mapping(base),
-            **_carried_stats(spark, base, base["files"]),
-            **_carried_partitions(base, base["files"]),
-            **_carried_constraints(base),
-            **_carried_generated(base),
-        }
-        if cf is not None:
-            body["change_files"] = cf
-        return body
-
-    try:
-        v = _commit(table_dir, build)
-    except CommitConflict:
-        if dv_dir is not None:
-            shutil.rmtree(dv_dir, ignore_errors=True)
-        if cf:
-            _discard_staged(cf)
-        raise
-    for col in index_cols:
+                # one scan feeds two writes (DV coordinates + change rows)
+                hit = hit.persist()
+            try:
+                dv_new, n_deleted = txn.write_dv(hit)
+                if n_deleted and change_files:
+                    cf = txn.write_changes(
+                        hit.drop(_DV_FILE, _DV_POS).withColumn(
+                            "_change_type", F.lit("delete")
+                        ),
+                        _col_mapping(base),
+                    )
+            finally:
+                if change_files:
+                    hit.unpersist()
         # file set unchanged → the index chains a zero-new-files link
         # (O(1)); probes stay correct because Bloom pruning is
-        # file-level and conservative — a file whose every matching
-        # row is DV-deleted still qualifies, and the exact filter +
-        # DV anti-join discard its rows
-        maintain_bloom_index(
-            spark, table_dir, col, version=v,
-            new_files=[], prior_version=base["version"],
-            max_chain=index_max_chain,
-            geometry=(index_geometry or {}).get(col),
+        # file-level and conservative — a file whose every matching row
+        # is DV-deleted still qualifies, and the exact filter + DV
+        # anti-join discard its rows
+        v = txn.commit(
+            "delete_mor",
+            row_delta=-n_deleted,
+            index_cols=index_cols,
+            index_geometry=index_geometry,
+            index_max_chain=index_max_chain,
+            dv_files=(base.get("dv_files") or []) + dv_new,
+            change_files=cf,
         )
     result = {
         "version": v,
@@ -3268,7 +3096,8 @@ def update_version(
     if not assignments:
         raise ValueError("update_version: empty assignments")
     cond = _scoped_cond(predicate, partition_scope)
-    base = _load_manifest(table_dir, base_version)
+    txn = _Txn(spark, table_dir, base_version)
+    base = txn.base
     _refuse_repeated_leaf_m(base, index_cols, "index_cols")
     cand = _partition_candidates(base, partition_scope)
     scan_files = base["files"] if cand is None else cand
@@ -3309,8 +3138,6 @@ def update_version(
         return df.select(*cols)
 
     if mode == "mor":
-        import shutil
-
         # one scan feeds two writes (DV coordinates + updated images):
         # persist the matched slice so the full-table filter runs once;
         # the scan is scoped to the partition candidates (out-of-scope
@@ -3322,89 +3149,46 @@ def update_version(
             if scan_files
             else _live_scan(spark, base, identity=True).filter(F.lit(False)).persist()
         )
-        try:
-            dv_dir = os.path.join(table_dir, _DV_DIR, uuid.uuid4().hex)
-            matched.select(
-                F.col(_DV_FILE).alias("file"), F.col(_DV_POS).alias("pos")
-            ).write.parquet(dv_dir)
-            dv_new = sorted(
-                _canon(os.path.join(dv_dir, f))
-                for f in os.listdir(dv_dir)
-                if f.endswith(".parquet")
-            )
-            n_updated = spark.read.parquet(dv_dir).count()
-            if n_updated == 0:
-                shutil.rmtree(dv_dir, ignore_errors=True)
-                dv_new, new_files = [], []
-            else:
-                updated = apply_assignments(
-                    matched.drop(_DV_FILE, _DV_POS), F.lit(True)
-                )
-                if change_files:
-                    # persisted: the recorded insert images must be the
-                    # SAME evaluation the data files committed, even
-                    # under a nondeterministic assignment expression
-                    updated = updated.persist()
-                try:
-                    new_files, _ = _write_data_files(
-                        spark, updated, table_dir, _col_mapping(base)
+        new_files: list[str] = []
+        with txn:
+            try:
+                dv_new, n_updated = txn.write_dv(matched)
+                if n_updated:
+                    updated = apply_assignments(
+                        matched.drop(_DV_FILE, _DV_POS), F.lit(True)
                     )
                     if change_files:
-                        cf = _write_change_files(
-                            spark,
-                            matched.drop(_DV_FILE, _DV_POS)
-                            .withColumn("_change_type", F.lit("delete"))
-                            .unionByName(
-                                updated.withColumn(
-                                    "_change_type", F.lit("insert")
-                                )
-                            ),
-                            table_dir,
-                            _col_mapping(base),
-                        )
-                finally:
-                    if change_files:
-                        updated.unpersist()
-        finally:
-            matched.unpersist()
-
-        def build(prior: dict | None) -> dict:
-            if prior is None or prior["version"] != base["version"]:
-                raise CommitConflict(
-                    f"table advanced past v{base['version']} — re-run the update"
-                )
-            body = {
-                "mode": "update_mor",
-                "files": base["files"] + new_files,
-                "n_rows": base["n_rows"],
-                "schema": schema_json,
-                "dv_files": (base.get("dv_files") or []) + dv_new,
-                **_carried_mapping(base),
-                **_carried_stats(
-                    spark, base, base["files"] + new_files, new_files
-                ),
-                **_carried_partitions(base, base["files"] + new_files),
-                **_carried_constraints(base),
-            **_carried_generated(base),
-            }
-            if cf is not None:
-                body["change_files"] = cf
-            return body
-
-        try:
-            v = _commit(table_dir, build)
-        except CommitConflict:
-            shutil.rmtree(dv_dir, ignore_errors=True)
-            _discard_staged(new_files)
-            if cf:
-                _discard_staged(cf)
-            raise
-        for col in index_cols:
-            maintain_bloom_index(
-                spark, table_dir, col, version=v,
-                new_files=new_files, prior_version=base["version"],
-                max_chain=index_max_chain,
-                geometry=(index_geometry or {}).get(col),
+                        # persisted: the recorded insert images must be
+                        # the SAME evaluation the data files committed,
+                        # even under a nondeterministic assignment
+                        updated = updated.persist()
+                    try:
+                        new_files, _ = txn.write_data(updated, _col_mapping(base))
+                        if change_files:
+                            cf = txn.write_changes(
+                                matched.drop(_DV_FILE, _DV_POS)
+                                .withColumn("_change_type", F.lit("delete"))
+                                .unionByName(
+                                    updated.withColumn(
+                                        "_change_type", F.lit("insert")
+                                    )
+                                ),
+                                _col_mapping(base),
+                            )
+                    finally:
+                        if change_files:
+                            updated.unpersist()
+            finally:
+                matched.unpersist()
+            v = txn.commit(
+                "update_mor",
+                new_files=new_files,
+                index_cols=index_cols,
+                index_geometry=index_geometry,
+                index_max_chain=index_max_chain,
+                schema=schema_json,
+                dv_files=(base.get("dv_files") or []) + dv_new,
+                change_files=cf,
             )
         result = {
             "version": v,
@@ -3429,84 +3213,52 @@ def update_version(
         # every file is out of scope: no row can match — no-op commit
         touched = set()
     carried = _carried_files(base["files"], touched)
-    if touched and change_files:
-        # one evaluation of the updated images, PERSISTED, feeds both
-        # the rewritten data files and the recorded change set — a
-        # nondeterministic assignment expression must not let the
-        # recorded insert images diverge from the committed rows; this
-        # also cuts the touched-file rescans from four to two
-        scope = _live_scan(spark, base, files=sorted(touched), identity=True)
-        old_images = scope.filter(cond).drop(_DV_FILE, _DV_POS).persist()
-        new_images = apply_assignments(old_images, F.lit(True)).persist()
-        try:
-            n_updated = new_images.count()
-            kept = scope.filter(~F.coalesce(cond, F.lit(False))).drop(
-                _DV_FILE, _DV_POS
-            )
-            new_files, n_new = _write_data_files(
-                spark,
-                kept.unionByName(new_images),
-                table_dir,
-                _col_mapping(base),
-            )
-            cf = _write_change_files(
-                spark,
-                old_images.withColumn("_change_type", F.lit("delete"))
-                .unionByName(
-                    new_images.withColumn("_change_type", F.lit("insert"))
-                ),
-                table_dir,
-                _col_mapping(base),
-            )
-        finally:
-            old_images.unpersist()
-            new_images.unpersist()
-    elif touched:
-        scope = _live_scan(spark, base, files=sorted(touched), identity=True)
-        n_updated = scope.filter(cond).count()
-        rewritten = apply_assignments(
-            scope, F.coalesce(cond, F.lit(False))
-        ).drop(_DV_FILE, _DV_POS)
-        new_files, n_new = _write_data_files(
-            spark, rewritten, table_dir, _col_mapping(base)
-        )
-    else:
-        n_updated, new_files = 0, []
-
-    def build(prior: dict | None) -> dict:
-        if prior is None or prior["version"] != base["version"]:
-            raise CommitConflict(
-                f"table advanced past v{base['version']} — re-run the update"
-            )
-        body = {
-            "mode": "update",
-            "files": carried + new_files,
-            "n_rows": base["n_rows"],
-            "schema": schema_json,
-            "dv_files": base.get("dv_files") or [],
-            **_carried_mapping(base),
-            **_carried_stats(spark, base, carried + new_files, new_files),
-            **_carried_partitions(base, carried + new_files),
-            **_carried_constraints(base),
-            **_carried_generated(base),
-        }
-        if cf is not None:
-            body["change_files"] = cf
-        return body
-
-    try:
-        v = _commit(table_dir, build)
-    except CommitConflict:
-        _discard_staged(new_files)
-        if cf:
-            _discard_staged(cf)
-        raise
-    for col in index_cols:
-        maintain_bloom_index(
-            spark, table_dir, col, version=v,
-            new_files=new_files, prior_version=base["version"],
-            max_chain=index_max_chain,
-            geometry=(index_geometry or {}).get(col),
+    with txn:
+        if touched and change_files:
+            # one evaluation of the updated images, PERSISTED, feeds both
+            # the rewritten data files and the recorded change set — a
+            # nondeterministic assignment expression must not let the
+            # recorded insert images diverge from the committed rows;
+            # this also cuts the touched-file rescans from four to two
+            scope = _live_scan(spark, base, files=sorted(touched), identity=True)
+            old_images = scope.filter(cond).drop(_DV_FILE, _DV_POS).persist()
+            new_images = apply_assignments(old_images, F.lit(True)).persist()
+            try:
+                n_updated = new_images.count()
+                kept = scope.filter(~F.coalesce(cond, F.lit(False))).drop(
+                    _DV_FILE, _DV_POS
+                )
+                new_files, _ = txn.write_data(
+                    kept.unionByName(new_images), _col_mapping(base)
+                )
+                cf = txn.write_changes(
+                    old_images.withColumn("_change_type", F.lit("delete"))
+                    .unionByName(
+                        new_images.withColumn("_change_type", F.lit("insert"))
+                    ),
+                    _col_mapping(base),
+                )
+            finally:
+                old_images.unpersist()
+                new_images.unpersist()
+        elif touched:
+            scope = _live_scan(spark, base, files=sorted(touched), identity=True)
+            n_updated = scope.filter(cond).count()
+            rewritten = apply_assignments(
+                scope, F.coalesce(cond, F.lit(False))
+            ).drop(_DV_FILE, _DV_POS)
+            new_files, _ = txn.write_data(rewritten, _col_mapping(base))
+        else:
+            n_updated, new_files = 0, []
+        v = txn.commit(
+            "update",
+            keep=carried,
+            new_files=new_files,
+            index_cols=index_cols,
+            index_geometry=index_geometry,
+            index_max_chain=index_max_chain,
+            schema=schema_json,
+            change_files=cf,
         )
     result = {
         "version": v,
@@ -3806,13 +3558,14 @@ def optimize_table(
     "bytes_before", "dv_files_folded", "n_rows"}``."""
     from pyspark.sql import functions as F
 
-    m = _load_manifest(table_dir, None)
+    txn = _Txn(spark, table_dir)
+    m = txn.base
     _refuse_repeated_leaf_m(m, index_cols, "index_cols")
     if not m["files"] or not m["n_rows"]:
         raise ValueError("optimize on an empty snapshot — nothing to pack")
     if incremental:
         return _optimize_incremental(
-            spark, table_dir, m, cluster_by, target_file_bytes,
+            txn, cluster_by, target_file_bytes,
             index_cols, change_files, width_frac_threshold,
         )
     bytes_before = sum(os.path.getsize(f) for f in m["files"])
@@ -3838,9 +3591,7 @@ def optimize_table(
 
 
 def _optimize_incremental(
-    spark: SparkSession,
-    table_dir: str,
-    m: dict,
+    txn: _Txn,
     cluster_by: Sequence[str],
     target_file_bytes: int,
     index_cols: Sequence[str],
@@ -3854,6 +3605,7 @@ def _optimize_incremental(
     never O(table)."""
     from pyspark.sql import functions as F
 
+    spark, table_dir, m = txn.spark, txn.table_dir, txn.base
     if len(cluster_by) != 1:
         raise ValueError(
             "incremental optimize clusters on exactly one column "
@@ -3940,43 +3692,16 @@ def _optimize_incremental(
     n_out = max(1, -(-bytes_sel // int(target_file_bytes)))
     live = _live_scan(spark, m, files=selected)
     rewritten = live.repartitionByRange(n_out, F.col(col))
-    new_files, _n_new = _write_data_files(
-        spark, rewritten, table_dir, _col_mapping(m)
-    )
-    cf: list[str] | None = [] if change_files else None
-
-    def build(prior: dict | None) -> dict:
-        if prior is None or prior["version"] != m["version"]:
-            raise CommitConflict(
-                f"table advanced past v{m['version']} — re-run the optimize"
-            )
-        body = {
-            "mode": "optimize_incremental",
-            "files": carried + new_files,
-            # live rows of the selected files rewrote 1:1 (DV'd rows
-            # fold away and were never in n_rows) — content unchanged
-            "n_rows": m["n_rows"],
-            "schema": m.get("schema"),
-            "dv_files": m.get("dv_files") or [],
-            **_carried_mapping(m),
-            **_carried_stats(spark, m, carried + new_files, new_files),
-            **_carried_partitions(m, carried + new_files),
-            **_carried_constraints(m),
-            **_carried_generated(m),
-        }
-        if cf is not None:
-            body["change_files"] = cf
-        return body
-
-    try:
-        v = _commit(table_dir, build)
-    except CommitConflict:
-        _discard_staged(new_files)
-        raise
-    for c in index_cols:
-        maintain_bloom_index(
-            spark, table_dir, c, version=v,
-            new_files=new_files, prior_version=m["version"],
+    with txn:
+        new_files, _ = txn.write_data(rewritten, _col_mapping(m))
+        # live rows of the selected files rewrite 1:1 (DV'd rows fold
+        # away and were never in n_rows) — content unchanged
+        v = txn.commit(
+            "optimize_incremental",
+            keep=carried,
+            new_files=new_files,
+            index_cols=index_cols,
+            change_files=[] if change_files else None,
         )
     after = layout_report(table_dir, col, version=v)["avg_point_reads"]
     return {
@@ -4132,8 +3857,9 @@ def restore_version(
     History is preserved, never truncated: the bad versions remain
     time-travel-readable (and CDF-diffable) until :func:`vacuum` drops
     them — restoring is a FORWARD commit, so concurrent readers and the
-    conflict-detection of in-flight writers see it as any other commit.
-    :func:`read_changes` across a restore yields exactly the row-level
+    conflict-detection of in-flight writers see it as any other commit;
+    it pins the head it read, so a commit racing the restore raises
+    :class:`CommitConflict`. :func:`read_changes` across a restore yields exactly the row-level
     undo set (re-inserts of what the bad commits deleted, deletes of
     what they added) with its usual O(changed files) scoping — the two
     file lists mostly re-converge.
@@ -4190,157 +3916,70 @@ def restore_version(
                 f"tag {tag!r} not found (have {sorted(pinned)})"
             )
         version = pinned[tag]
+    txn = _Txn(spark, table_dir, branch=branch)
     target = _load_manifest(table_dir, version, branch)
     _refuse_repeated_leaf_m(target, index_cols, "index_cols")
     cf: list[str] | None = None
-    if change_files:
-        if branch is not None:
-            raise ValueError(
-                "change_files=True on a branch restore — the change "
-                "feed is main-lineage; restore the branch without it"
-            )
-        from pyspark.sql import functions as F
-
-        sch = target.get("schema")
-        _refuse_change_clash(
-            [f["name"] for f in json.loads(sch)["fields"]] if sch else []
+    if change_files and branch is not None:
+        raise ValueError(
+            "change_files=True on a branch restore — the change "
+            "feed is main-lineage; restore the branch without it"
         )
-        head = _version_numbers(table_dir)[-1]
-        # the restore turns snapshot(head) into snapshot(target): its
-        # change set is the INVERSE of the target→head feed, computed
-        # with read_changes' own O(changed files) scoping
-        undo = read_changes(
-            spark, table_dir, from_version=version, to_version=head
-        ).withColumn(
-            "_change_type",
-            F.when(F.col("_change_type") == "insert", F.lit("delete"))
-            .otherwise(F.lit("insert")),
-        )
-        # the undo frame carries read_changes' UNION-schema logical
-        # names — the HEAD's names for id-shared columns (a column
-        # renamed between target and head appears under its head name),
-        # plus target-only names for columns dropped since. Translating
-        # with the target mapping alone would miss the head names and
-        # stage the renamed column under a name no consumer's physical
-        # lookup knows (silent NULL-fill downstream) — so physicalize
-        # through target ∪ head, head names winning; physical names are
-        # id-frozen, so both mappings agree wherever they overlap.
-        head_map = _col_mapping(_load_manifest(table_dir, head))
-        syn_fields: dict[str, dict] = {}
-        for src_map in (_col_mapping(target), head_map):
-            if src_map:
-                syn_fields.update(src_map["fields"])
-        syn_map = (
-            {"fields": syn_fields, "next_id": 0, "retired": []}
-            if syn_fields
-            else None
-        )
-        cf = _write_change_files(spark, undo, table_dir, syn_map)
+    with txn:
+        if change_files:
+            from pyspark.sql import functions as F
 
-    def build(prior: dict | None) -> dict:
-        if cf is not None and (prior is None or prior["version"] != head):
-            # the recorded undo set was computed against `head`; a
-            # commit that raced in between would make it wrong — refuse
-            # rather than record a stale change set
-            raise CommitConflict(
-                f"table advanced past v{head} while the restore's change "
-                "set was being computed — re-run the restore"
+            sch = target.get("schema")
+            _refuse_change_clash(
+                [f["name"] for f in json.loads(sch)["fields"]] if sch else []
             )
-        body = {
-            "mode": "restore",
-            "restored_from": version,
-            "files": list(target["files"]),
-            "n_rows": target["n_rows"],
-            "schema": target.get("schema"),
-            "dv_files": list(target.get("dv_files") or []),
-            **_carried_mapping(target),
-        }
-        if cf is not None:
-            body["change_files"] = cf
-        if target.get("stats_cols"):
-            body["stats_cols"] = target["stats_cols"]
-            body["stats"] = target.get("stats") or {}
-        if target.get("partition_cols"):
-            body["partition_cols"] = target["partition_cols"]
-            body["partitions"] = target.get("partitions") or {}
-        if target.get("constraints"):
-            body["constraints"] = dict(target["constraints"])
-        if target.get("generated_cols"):
-            body["generated_cols"] = dict(target["generated_cols"])
-        return body
-
-    try:
-        v = _commit(table_dir, build, branch=branch)
-    except CommitConflict:
-        if cf:
-            _discard_staged(cf)
-        raise
-    index_result: dict[str, str] = {}
-    _rmap = _col_mapping(target)
-    for col in index_cols:
-        if (
-            _resolve_probe_index(table_dir, target, _phys_path(_rmap, col))
-            is not None
-        ):
-            # the target's index covers exactly the restored file set —
-            # chain a zero-increment link onto it (O(1)); the undone
-            # versions' links fall out of the reference graph and
-            # vacuum reclaims them
-            maintain_bloom_index(
-                spark, table_dir, col, version=v,
-                new_files=[], prior_version=version,
-                max_chain=index_max_chain,
+            # the restore turns snapshot(head) into snapshot(target): its
+            # change set is the INVERSE of the target→head feed, computed
+            # with read_changes' own O(changed files) scoping
+            undo = read_changes(
+                spark, table_dir, from_version=version, to_version=txn.pin
+            ).withColumn(
+                "_change_type",
+                F.when(F.col("_change_type") == "insert", F.lit("delete"))
+                .otherwise(F.lit("insert")),
             )
-            index_result[col] = "chained"
-        else:
-            geo = _resolve_index_geometry(
-                table_dir, _phys_path(_rmap, col), v - 1, None
+            # the undo frame carries read_changes' UNION-schema logical
+            # names — the HEAD's names for id-shared columns (a column
+            # renamed between target and head appears under its head name),
+            # plus target-only names for columns dropped since. Translating
+            # with the target mapping alone would miss the head names and
+            # stage the renamed column under a name no consumer's physical
+            # lookup knows (silent NULL-fill downstream) — so physicalize
+            # through target ∪ head, head names winning; physical names are
+            # id-frozen, so both mappings agree wherever they overlap.
+            syn_fields: dict[str, dict] = {}
+            for src_map in (_col_mapping(target), _col_mapping(txn.base)):
+                if src_map:
+                    syn_fields.update(src_map["fields"])
+            syn_map = (
+                {"fields": syn_fields, "next_id": 0, "retired": []}
+                if syn_fields
+                else None
             )
-            if geo is None:
-                write_bloom_index(spark, table_dir, col, version=v)
-            else:
-                write_bloom_index(
-                    spark, table_dir, col, version=v, m_bits=geo[0], k=geo[1]
-                )
-            index_result[col] = "rebuilt"
+            cf = txn.write_changes(undo, syn_map)
+        # per index column: a zero-new-files chain link onto the target's
+        # index (O(1) — the restored file set IS the target's), else a
+        # full rebuild at the recorded/inherited geometry
+        v = txn.commit(
+            "restore",
+            carry=target,
+            index_cols=index_cols,
+            index_max_chain=index_max_chain,
+            restored_from=version,
+            change_files=cf,
+        )
     return {
         "version": v,
         "restored_from": version,
         "files_restored": len(target["files"]),
         "data_files_written": 0,
-        "index": index_result,
+        "index": dict(txn.indexed),
     }
-
-
-def _metadata_only_body(m: dict, mode: str) -> dict:
-    """Manifest body that carries an existing snapshot verbatim (files,
-    rows, schema, DVs, stats, partitions, constraints) under a new
-    ``mode`` — the shape of every metadata-only commit (constraint
-    add/drop)."""
-    body = {
-        "mode": mode,
-        "files": list(m["files"]),
-        "n_rows": m["n_rows"],
-        "schema": m.get("schema"),
-        "dv_files": list(m.get("dv_files") or []),
-        **_carried_mapping(m),
-        # a metadata-only commit changes ZERO rows, so its exact change
-        # set is the empty set — record it unconditionally, otherwise
-        # one rename/constraint commit knocks every straddling range
-        # off read_changes' recorded fast path forever
-        "change_files": [],
-    }
-    if m.get("stats_cols"):
-        body["stats_cols"] = m["stats_cols"]
-        body["stats"] = m.get("stats") or {}
-    if m.get("partition_cols"):
-        body["partition_cols"] = m["partition_cols"]
-        body["partitions"] = m.get("partitions") or {}
-    if m.get("constraints"):
-        body["constraints"] = dict(m["constraints"])
-    if m.get("generated_cols"):
-        body["generated_cols"] = dict(m["generated_cols"])
-    return body
 
 
 def add_constraint(
@@ -4359,7 +3998,8 @@ def add_constraint(
     O(increment) cost. Returns the new version number."""
     from pyspark.sql import functions as F
 
-    m = _load_manifest(table_dir, None)
+    txn = _Txn(spark, table_dir)
+    m = txn.base
     cc = dict(m.get("constraints") or {})
     if name in cc:
         raise ValueError(
@@ -4380,44 +4020,25 @@ def add_constraint(
                 "validation is for)"
             )
     cc[name] = expr
-
-    def build(prior: dict | None) -> dict:
-        if prior is None or prior["version"] != m["version"]:
-            raise CommitConflict(
-                f"table advanced past v{m['version']} — re-run add_constraint"
-            )
-        body = _metadata_only_body(m, "add_constraint")
-        body["constraints"] = cc
-        return body
-
-    return _commit(table_dir, build)
+    # a metadata-only commit changes ZERO rows, so its exact change set
+    # is the empty set — recorded, otherwise one rename/constraint
+    # commit knocks every straddling range off read_changes' recorded
+    # fast path forever
+    return txn.commit("add_constraint", change_files=[], constraints=cc)
 
 
 def drop_constraint(table_dir: str, name: str) -> int:
     """DROP a recorded CHECK constraint — a metadata-only commit (the
     deliberate contract-shrink path; loud on an unknown name). Returns
     the new version number."""
-    m = _load_manifest(table_dir, None)
-    cc = dict(m.get("constraints") or {})
+    txn = _Txn(None, table_dir)
+    cc = dict(txn.base.get("constraints") or {})
     if name not in cc:
         raise ValueError(
             f"constraint {name!r} not recorded (have {sorted(cc)})"
         )
     del cc[name]
-
-    def build(prior: dict | None) -> dict:
-        if prior is None or prior["version"] != m["version"]:
-            raise CommitConflict(
-                f"table advanced past v{m['version']} — re-run drop_constraint"
-            )
-        body = _metadata_only_body(m, "drop_constraint")
-        if cc:
-            body["constraints"] = cc
-        else:
-            body.pop("constraints", None)
-        return body
-
-    return _commit(table_dir, build)
+    return txn.commit("drop_constraint", change_files=[], constraints=cc or None)
 
 
 _RESERVED_COLUMN_NAMES = {
@@ -4474,7 +4095,8 @@ def enable_column_mapping(table_dir: str) -> int:
     an already-mapped table returns its current version untouched."""
     from pyspark.sql.types import StructType
 
-    m = _load_manifest(table_dir, None)
+    txn = _Txn(None, table_dir)
+    m = txn.base
     if _col_mapping(m):
         return m["version"]
     if not m.get("schema"):
@@ -4483,18 +4105,9 @@ def enable_column_mapping(table_dir: str) -> int:
             "needs one to freeze physical names from"
         )
     mapping = _init_mapping(StructType.fromJson(json.loads(m["schema"])))
-
-    def build(prior: dict | None) -> dict:
-        if prior is None or prior["version"] != m["version"]:
-            raise CommitConflict(
-                f"table advanced past v{m['version']} — re-run "
-                "enable_column_mapping"
-            )
-        body = _metadata_only_body(m, "enable_column_mapping")
-        body["column_mapping"] = mapping
-        return body
-
-    return _commit(table_dir, build)
+    return txn.commit(
+        "enable_column_mapping", change_files=[], column_mapping=mapping
+    )
 
 
 def _rename_in_dtype(dtype, parts: list[str], new_leaf: str):
@@ -4559,9 +4172,7 @@ def _phys_rel(nested: dict, rel_parts: list[str]) -> str:
     return ".".join(out)
 
 
-def _rename_nested(
-    table_dir: str, m: dict, schema, old: str, new: str
-) -> int:
+def _rename_nested(txn: _Txn, schema, old: str, new: str) -> int:
     """Nested-field RENAME body (see :func:`rename_column`): same
     metadata-only cost — the leaf keeps its frozen physical name and a
     freshly-minted (or carried) field id; descendants' map keys ride a
@@ -4588,8 +4199,10 @@ def _rename_nested(
         )
     # conservative: any machinery addressing the TOP column could reach
     # the renamed leaf through it
-    _refuse_column_dependents(table_dir, m, top, "rename a nested field of")
-    mapping = _col_mapping(m) or _init_mapping(schema)
+    _refuse_column_dependents(
+        txn.table_dir, txn.base, top, "rename a nested field of"
+    )
+    mapping = _col_mapping(txn.base) or _init_mapping(schema)
     fields = {l: dict(e) for l, e in mapping["fields"].items()}
     entry = fields[top]
     nested = dict(_nested_of(entry))
@@ -4630,35 +4243,29 @@ def _rename_nested(
         ]
     )
 
-    def build(prior: dict | None) -> dict:
-        if prior is None or prior["version"] != m["version"]:
-            raise CommitConflict(
-                f"table advanced past v{m['version']} — re-run rename_column"
-            )
-        body = _metadata_only_body(m, "rename_column")
-        body["schema"] = new_schema.json()
-        body["column_mapping"] = new_mapping
-        new_path = ".".join([top] + parts[1:-1] + [new])
-        body["renamed"] = {"from": old, "to": new_path, "id": rec["id"]}
-        scs = body.get("stats_cols") or []
+    new_path = ".".join([top] + parts[1:-1] + [new])
 
-        def _under(c: str) -> bool:
-            # a literal-dotted top-level name is its own column and
-            # never rewrites by prefix (mirrors _phys_path dispatch)
-            if c in fields:
-                return False
-            return c == old or c.startswith(old + ".")
+    def _under(c: str) -> bool:
+        # a literal-dotted top-level name is its own column and
+        # never rewrites by prefix (mirrors _phys_path dispatch)
+        if c in fields:
+            return False
+        return c == old or c.startswith(old + ".")
 
-        if any(_under(c) for c in scs):
-            # dotted stats_cols entries are LOGICAL paths and follow
-            # the rename; per-file envelopes are physical-keyed and
-            # stay valid untouched
-            body["stats_cols"] = [
-                new_path + c[len(old):] if _under(c) else c for c in scs
-            ]
-        return body
-
-    return _commit(table_dir, build)
+    # dotted stats_cols entries are LOGICAL paths and follow the rename;
+    # per-file envelopes are physical-keyed and stay valid untouched
+    return txn.commit(
+        "rename_column",
+        change_files=[],
+        schema=new_schema.json(),
+        column_mapping=new_mapping,
+        renamed={"from": old, "to": new_path, "id": rec["id"]},
+        stats_cols=[
+            new_path + c[len(old):] if _under(c) else c
+            for c in txn.base.get("stats_cols") or []
+        ]
+        or None,
+    )
 
 
 def rename_column(table_dir: str, old: str, new: str) -> int:
@@ -4695,7 +4302,8 @@ def rename_column(table_dir: str, old: str, new: str) -> int:
     Returns the new version number."""
     from pyspark.sql.types import StructField, StructType
 
-    m = _load_manifest(table_dir, None)
+    txn = _Txn(None, table_dir)
+    m = txn.base
     if not m.get("schema"):
         raise ValueError(f"{table_dir!r} has no recorded schema")
     schema = StructType.fromJson(json.loads(m["schema"]))
@@ -4704,7 +4312,7 @@ def rename_column(table_dir: str, old: str, new: str) -> int:
     # in Spark) stays renameable; only unmatched dotted paths dispatch
     # to the nested handler
     if "." in old and old not in names:
-        return _rename_nested(table_dir, m, schema, old, new)
+        return _rename_nested(txn, schema, old, new)
     if old not in names:
         raise ValueError(f"column {old!r} not in schema (have {names})")
     if new in names:
@@ -4732,37 +4340,57 @@ def rename_column(table_dir: str, old: str, new: str) -> int:
         ]
     )
 
-    def build(prior: dict | None) -> dict:
-        if prior is None or prior["version"] != m["version"]:
-            raise CommitConflict(
-                f"table advanced past v{m['version']} — re-run rename_column"
-            )
-        body = _metadata_only_body(m, "rename_column")
-        body["schema"] = new_schema.json()
-        body["column_mapping"] = new_mapping
-        body["renamed"] = {"from": old, "to": new, "id": entry["id"]}
-        scs = body.get("stats_cols") or []
+    def _under(c: str) -> bool:
+        # exact match, or a dotted NESTED path under the renamed
+        # column (a literal-dotted top-level name never rewrites
+        # by prefix — it is its own column)
+        return c == old or (
+            c.startswith(old + ".") and c not in mapping["fields"]
+        )
 
-        def _under(c: str) -> bool:
-            # exact match, or a dotted NESTED path under the renamed
-            # column (a literal-dotted top-level name never rewrites
-            # by prefix — it is its own column)
-            return c == old or (
-                c.startswith(old + ".") and c not in mapping["fields"]
-            )
-
-        if any(_under(c) for c in scs):
-            # the logical list follows the rename; per-file envelopes
-            # are physical-keyed and stay valid untouched
-            body["stats_cols"] = [
-                new + c[len(old):] if _under(c) else c for c in scs
-            ]
-        return body
-
-    return _commit(table_dir, build)
+    # the logical stats list follows the rename; per-file envelopes are
+    # physical-keyed and stay valid untouched
+    return txn.commit(
+        "rename_column",
+        change_files=[],
+        schema=new_schema.json(),
+        column_mapping=new_mapping,
+        renamed={"from": old, "to": new, "id": entry["id"]},
+        stats_cols=[
+            new + c[len(old):] if _under(c) else c
+            for c in m.get("stats_cols") or []
+        ]
+        or None,
+    )
 
 
-def _drop_nested(table_dir: str, m: dict, schema, name: str) -> int:
+def _dropped_stats(m: dict, under: Callable[[str], bool], phys: str) -> dict:
+    """Stats fields for a commit that drops the column at PHYSICAL path
+    ``phys``: logical ``stats_cols`` entries ``under`` the dropped path
+    leave the contract and their physical-keyed envelopes are scrubbed
+    with them (a stale key would fail the fsck ``stats_envelopes``
+    audit). Empty when no recorded stats column is affected."""
+    scs = m.get("stats_cols") or []
+    rest = [c for c in scs if not under(c)]
+    if rest == scs:
+        return {}
+    if not rest:
+        return {"stats_cols": None, "stats": None}
+    scrubbed = {
+        f: {
+            c: e
+            for c, e in ent.items()
+            if c != phys and not c.startswith(phys + ".")
+        }
+        for f, ent in (m.get("stats") or {}).items()
+    }
+    return {
+        "stats_cols": rest,
+        "stats": {f: e for f, e in scrubbed.items() if e},
+    }
+
+
+def _drop_nested(txn: _Txn, schema, name: str) -> int:
     """Nested-field DROP body (see :func:`drop_column`)."""
     parts = name.split(".")
     top = parts[0]
@@ -4776,7 +4404,8 @@ def _drop_nested(table_dir: str, m: dict, schema, name: str) -> int:
             f"cannot drop {name!r}: it is the last field of its struct "
             "— drop the enclosing column instead"
         )
-    _refuse_column_dependents(table_dir, m, top, "drop a nested field of")
+    m = txn.base
+    _refuse_column_dependents(txn.table_dir, m, top, "drop a nested field of")
     mapping = _col_mapping(m) or _init_mapping(schema)
     fields = {l: dict(e) for l, e in mapping["fields"].items()}
     entry = fields[top]
@@ -4817,45 +4446,20 @@ def _drop_nested(table_dir: str, m: dict, schema, name: str) -> int:
         ]
     )
 
-    def build(prior: dict | None) -> dict:
-        if prior is None or prior["version"] != m["version"]:
-            raise CommitConflict(
-                f"table advanced past v{m['version']} — re-run drop_column"
-            )
-        body = _metadata_only_body(m, "drop_column")
-        body["schema"] = new_schema.json()
-        body["column_mapping"] = new_mapping
-        body["dropped"] = {"name": name, "id": dropped_id}
-        scs = body.get("stats_cols") or []
-        gone = {
-            c
-            for c in scs
-            if c not in fields
-            and (c == name or c.startswith(name + "."))
-        }
-        if gone:
-            # a dotted stats leaf under the dropped path leaves the
-            # contract; envelopes scrub by the frozen PHYSICAL path
-            full_phys = entry["physical"] + "." + phys_path
-            rest = [c for c in scs if c not in gone]
-            scrubbed = {
-                f: {
-                    c: e
-                    for c, e in ent.items()
-                    if c != full_phys
-                    and not c.startswith(full_phys + ".")
-                }
-                for f, ent in (body.get("stats") or {}).items()
-            }
-            if rest:
-                body["stats_cols"] = rest
-                body["stats"] = {f: e for f, e in scrubbed.items() if e}
-            else:
-                body.pop("stats_cols", None)
-                body.pop("stats", None)
-        return body
-
-    return _commit(table_dir, build)
+    # a dotted stats leaf under the dropped path leaves the contract;
+    # envelopes scrub by the frozen PHYSICAL path
+    return txn.commit(
+        "drop_column",
+        change_files=[],
+        schema=new_schema.json(),
+        column_mapping=new_mapping,
+        dropped={"name": name, "id": dropped_id},
+        **_dropped_stats(
+            m,
+            lambda c: c not in fields and (c == name or c.startswith(name + ".")),
+            entry["physical"] + "." + phys_path,
+        ),
+    )
 
 
 def drop_column(table_dir: str, name: str) -> int:
@@ -4881,14 +4485,15 @@ def drop_column(table_dir: str, name: str) -> int:
     the column itself. Returns the new version number."""
     from pyspark.sql.types import StructType
 
-    m = _load_manifest(table_dir, None)
+    txn = _Txn(None, table_dir)
+    m = txn.base
     if not m.get("schema"):
         raise ValueError(f"{table_dir!r} has no recorded schema")
     schema = StructType.fromJson(json.loads(m["schema"]))
     names = [f.name for f in schema.fields]
     # exact top-level match wins (see rename_column)
     if "." in name and name not in names:
-        return _drop_nested(table_dir, m, schema, name)
+        return _drop_nested(txn, schema, name)
     if name not in names:
         raise ValueError(f"column {name!r} not in schema (have {names})")
     if len(names) == 1:
@@ -4904,47 +4509,21 @@ def drop_column(table_dir: str, name: str) -> int:
     }
     new_schema = StructType([f for f in schema.fields if f.name != name])
 
-    def build(prior: dict | None) -> dict:
-        if prior is None or prior["version"] != m["version"]:
-            raise CommitConflict(
-                f"table advanced past v{m['version']} — re-run drop_column"
-            )
-        body = _metadata_only_body(m, "drop_column")
-        body["schema"] = new_schema.json()
-        body["column_mapping"] = new_mapping
-        body["dropped"] = {"name": name, "id": entry["id"]}
-        scs_d = body.get("stats_cols") or []
-
-        def _under(c: str) -> bool:
-            return c == name or (
-                c.startswith(name + ".") and c not in mapping["fields"]
-            )
-
-        if any(_under(c) for c in scs_d):
-            # the dropped column leaves the stats contract (dotted
-            # leaf entries under it too); its physical-keyed per-file
-            # envelopes scrub with it (a stale key would fail the
-            # fsck stats_envelopes audit)
-            rest = [c for c in scs_d if not _under(c)]
-            phys_pref = entry["physical"] + "."
-            scrubbed = {
-                f: {
-                    c: e
-                    for c, e in ent.items()
-                    if c != entry["physical"]
-                    and not c.startswith(phys_pref)
-                }
-                for f, ent in (body.get("stats") or {}).items()
-            }
-            if rest:
-                body["stats_cols"] = rest
-                body["stats"] = {f: e for f, e in scrubbed.items() if e}
-            else:
-                body.pop("stats_cols", None)
-                body.pop("stats", None)
-        return body
-
-    return _commit(table_dir, build)
+    # the dropped column leaves the stats contract (dotted leaf entries
+    # under it too) and its envelopes scrub with it
+    return txn.commit(
+        "drop_column",
+        change_files=[],
+        schema=new_schema.json(),
+        column_mapping=new_mapping,
+        dropped={"name": name, "id": entry["id"]},
+        **_dropped_stats(
+            m,
+            lambda c: c == name
+            or (c.startswith(name + ".") and c not in mapping["fields"]),
+            entry["physical"],
+        ),
+    )
 
 
 def clone_table(
@@ -4985,7 +4564,9 @@ def clone_table(
       ``dst_dir`` — the materialize-a-clone path).
 
     ``dst_dir`` must not already be a versioned table (loud — a clone
-    is a CREATE, never an implicit overwrite). Returns ``{"version",
+    is a CREATE, never an implicit overwrite; a writer that creates it
+    concurrently makes the clone raise :class:`CommitConflict`). Returns
+    ``{"version",
     "cloned_from", "files", "data_files_written"}`` with
     ``data_files_written`` always 0."""
     if _version_numbers(dst_dir):
@@ -4994,33 +4575,12 @@ def clone_table(
             "new table; point it at an empty directory"
         )
     src = _load_manifest(src_dir, version)
-
-    def build(prior: dict | None) -> dict:
-        body = {
-            "mode": "clone",
-            "cloned_from": {"table": _canon(src_dir), "version": src["version"]},
-            "files": list(src["files"]),
-            "n_rows": src["n_rows"],
-            "schema": src.get("schema"),
-            "dv_files": list(src.get("dv_files") or []),
-            **_carried_mapping(src),
-        }
-        if src.get("stats_cols"):
-            body["stats_cols"] = src["stats_cols"]
-            body["stats"] = src.get("stats") or {}
-        if src.get("partition_cols"):
-            body["partition_cols"] = src["partition_cols"]
-            body["partitions"] = src.get("partitions") or {}
-        if src.get("constraints"):
-            body["constraints"] = dict(src["constraints"])
-        if src.get("generated_cols"):
-            body["generated_cols"] = dict(src["generated_cols"])
-        return body
-
-    v = _commit(dst_dir, build)
+    origin = {"table": _canon(src_dir), "version": src["version"]}
+    # the clone is a CREATE: it lands on the empty table or conflicts
+    v = _Txn(None, dst_dir, 0).commit("clone", carry=src, cloned_from=origin)
     return {
         "version": v,
-        "cloned_from": {"table": _canon(src_dir), "version": src["version"]},
+        "cloned_from": origin,
         "files": len(src["files"]),
         "data_files_written": 0,
     }
@@ -6458,8 +6018,6 @@ def vacuum(
     the single-writer convention doesn't carry — tag before vacuuming,
     the same discipline as "vacuum only when readers are on retained
     versions"."""
-    import shutil
-
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     if older_than_hours is not None and older_than_hours < 0:
@@ -6610,11 +6168,7 @@ def vacuum(
             full = os.path.join(dv_root, dv_dir)
             if not os.path.isdir(full):
                 continue
-            parts = [
-                _canon(os.path.join(full, f))
-                for f in os.listdir(full)
-                if f.endswith(".parquet")
-            ]
+            parts = _part_files(full)
             if parts and any(p in keep_dv for p in parts):
                 continue
             shutil.rmtree(full, ignore_errors=True)
@@ -6633,11 +6187,7 @@ def vacuum(
             full = os.path.join(cf_root, cf_dir)
             if not os.path.isdir(full):
                 continue
-            parts = [
-                _canon(os.path.join(full, f))
-                for f in os.listdir(full)
-                if f.endswith(".parquet")
-            ]
+            parts = _part_files(full)
             if parts and any(p in keep_cf for p in parts):
                 continue
             shutil.rmtree(full, ignore_errors=True)

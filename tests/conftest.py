@@ -23,3 +23,15 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def checkpoint_dir(spark, tmp_path_factory) -> str:
+    """The session's reliable-checkpoint directory. setCheckpointDir is
+    SparkContext-global and ``neardup.materialize`` refuses a conflicting
+    directory, so every reliable-tier test checkpoints under this one."""
+    current = spark.sparkContext.getCheckpointDir()
+    if current is None:
+        current = str(tmp_path_factory.mktemp("checkpoints"))
+        spark.sparkContext.setCheckpointDir(current)
+    return current

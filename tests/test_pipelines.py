@@ -1,10 +1,15 @@
 """End-to-end pipeline tests (SURVEY.md §3): each reference DAG runs as
-one Spark lineage against fakes — P1 from the golden raw dump, P2 with a
-recording warehouse load, P3 through fake listings into a sqlite upsert.
+one Spark lineage against fakes — P1 from a synthetic raw dump built to
+FIXTURES.md §F1 (and, when the reference output is present, from the
+golden dump), P2 with a recording warehouse load, P3 through fake
+listings into a sqlite upsert.
 """
 
 from __future__ import annotations
 
+import json
+import os
+import random
 import sqlite3
 
 import pytest
@@ -22,6 +27,89 @@ GOLDEN_RAW = "/root/reference/output/raw_data.json"
 GOLDEN_PARQUET = "/root/reference/output/transform_data.parquet"
 
 
+GENRES = ["action", "thriller", "drama", "fantasy", "history", "poetry", "romance"]
+
+
+def _f1_dump(n: int = 157, seed: int = 7) -> list:
+    """A synthetic raw dump built to FIXTURES.md §F1: a JSON array of
+    single-element wrappers (plus one empty wrapper), ~29 % of books
+    without ``image`` (absent key), ~19 % with a ``subtitle``,
+    ``authors`` as 1-3 entries, ``[]`` or absent, and ``rating`` /
+    ``rating.average`` sometimes absent."""
+    rnd = random.Random(seed)
+    dump = []
+    for i in range(1, n + 1):
+        b = {"id": i, "title": f"Book {i}", "genres": rnd.sample(GENRES, rnd.randint(1, 6))}
+        if rnd.random() >= 0.29:
+            b["image"] = f"https://img.example/{i}.jpg"
+        if rnd.random() < 0.19:
+            b["subtitle"] = f"Part {i}"
+        r = rnd.random()
+        if r >= 0.2:
+            b["authors"] = [
+                {"id": 1000 + 3 * i + k, "name": f"Author {i}.{k}"}
+                for k in range(rnd.randint(1, 3))
+            ]
+        elif r >= 0.1:
+            b["authors"] = []
+        r = rnd.random()
+        if r >= 0.2:
+            b["rating"] = {"average": rnd.uniform(0.628, 0.932)}
+        elif r >= 0.1:
+            b["rating"] = {}
+        dump.append([b])
+    dump.insert(n // 2, [])
+    return dump
+
+
+def _transformed(b: dict) -> dict:
+    """One book through the documented transform rules (T1-T8): subtitle
+    dropped, missing image/rating null, rating = average × 100 in
+    float64, authors (``or []``) split into stringified ids and names."""
+    authors = b.get("authors") or []
+    avg = (b.get("rating") or {}).get("average")
+    return {
+        "id": b["id"],
+        "title": b["title"],
+        "image": b.get("image"),
+        "genres": b["genres"],
+        "rating": None if avg is None else avg * 100.0,
+        "author_id": [str(a["id"]) for a in authors],
+        "author_name": [a["name"] for a in authors],
+    }
+
+
+def test_books_pipeline_end_to_end(spark, tmp_path):
+    dump = _f1_dump()
+    books = [w[0] for w in dump if w]
+    # the dump exercises every §F1 edge case
+    assert any("image" not in b for b in books)
+    assert any("subtitle" in b for b in books)
+    assert any("authors" not in b for b in books)
+    assert any(b.get("authors") == [] for b in books)
+    assert any("rating" not in b for b in books)
+    assert any(b.get("rating") == {} for b in books)
+    raw = tmp_path / "raw_data.json"
+    raw.write_text(json.dumps(dump, indent=4))  # pretty-printed, as extracted
+    loaded = {}
+    silver = books_pipeline(
+        spark,
+        raw_json_path=str(raw),
+        silver_parquet_path=str(tmp_path / "silver"),
+        load=lambda df: loaded.update(n=df.count()),
+    )
+    assert loaded["n"] == len(books) == 157
+    assert silver.columns == [
+        "id", "title", "image", "genres", "rating", "author_id", "author_name"
+    ]
+    got = {r["id"]: r.asDict() for r in silver.collect()}
+    assert got == {b["id"]: _transformed(b) for b in books}
+
+
+@pytest.mark.skipif(
+    not (os.path.exists(GOLDEN_RAW) and os.path.exists(GOLDEN_PARQUET)),
+    reason="reference fixtures not present",
+)
 def test_books_pipeline_golden_end_to_end(spark, tmp_path):
     loaded = {}
     silver = books_pipeline(

@@ -212,7 +212,7 @@ def test_connected_components_matches_union_find(spark, seed):
     assert got == want
 
 
-def test_connected_components_reliable_checkpoint_path(spark, tmp_path):
+def test_connected_components_reliable_checkpoint_path(spark, checkpoint_dir):
     """checkpoint_dir flips every per-round materialization to reliable
     .checkpoint(); labels must be identical to the local tier."""
     import os
@@ -224,15 +224,14 @@ def test_connected_components_reliable_checkpoint_path(spark, tmp_path):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22)], ["id_a", "id_b"]
     )
-    ckpt = str(tmp_path / "cc_ckpt")
+    ckpt = checkpoint_dir
     local = {r["node"]: r["label"] for r in connected_components(pairs).collect()}
     reliable = {
         r["node"]: r["label"]
         for r in connected_components(pairs, checkpoint_dir=ckpt).collect()
     }
     assert local == reliable
-    # setCheckpointDir is session-global and first-caller-wins: files
-    # land under the SESSION's dir (ours, unless an earlier test set it)
+    # setCheckpointDir is session-global: files land under the SESSION's dir
     session_dir = spark.sparkContext.getCheckpointDir().removeprefix("file:")
     assert any(os.scandir(session_dir))
 

@@ -45,6 +45,25 @@ def test_partial_garbage_fields_null_not_crash(spark, tmp_path):
     assert rows[0]["author_id"] == ["7"]
 
 
+def test_bare_book_objects_beside_wrappers(spark, tmp_path):
+    """FIXTURES.md §F1 and the reference (``book[0] if isinstance(book,
+    (list, tuple)) else book``) accept bare book objects beside the
+    one-element wrappers: [[b1], b2, [], [b3]] keeps all three books,
+    read in one task."""
+    import json
+
+    def book(i):
+        return {"id": i, "title": f"t{i}", "genres": ["g"], "rating": {"average": 0.5}}
+
+    p = tmp_path / "raw.json"
+    p.write_text(json.dumps([[book(1)], book(2), [], [book(3)]]))
+    raw = read_raw_books(spark, str(p))
+    assert raw.rdd.getNumPartitions() == 1
+    rows = transform_books(raw).collect()
+    assert sorted(r["id"] for r in rows) == [1, 2, 3]
+    assert {r["rating"] for r in rows} == {50.0}
+
+
 def test_float_string_id_truncates(spark, tmp_path):
     # T5 parity: int(float("3.9")) == 3
     content = '[[{"id": "3.9", "title": "t", "genres": [], "authors": [], "rating": {"average": "1"}}]]'

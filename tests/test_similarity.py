@@ -355,7 +355,7 @@ def test_ivf_training_sample_partition_invariant(emb, spark):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
-def test_jaccard_pairs_reliable_checkpoint_path(spark, tmp_path):
+def test_jaccard_pairs_reliable_checkpoint_path(spark, checkpoint_dir):
     """checkpoint_dir switches lineage truncation to the fault-tolerant
     reliable .checkpoint(); results must be identical and checkpoint
     files must actually land under the directory."""
@@ -369,23 +369,25 @@ def test_jaccard_pairs_reliable_checkpoint_path(spark, tmp_path):
         (3, "a completely different document about spark query planning"),
     ]
     df = spark.createDataFrame(docs, ["doc_id", "text"])
-    ckpt = str(tmp_path / "ckpt")
+    ckpt = checkpoint_dir
     local = sorted(map(tuple, neardup.jaccard_pairs(df).collect()))
     reliable = sorted(
         map(tuple, neardup.jaccard_pairs(df, checkpoint_dir=ckpt).collect())
     )
     assert local == reliable and local
-    # first-caller-wins: files land under the SESSION's checkpoint dir
+    # files land under the SESSION's checkpoint dir
     session_dir = spark.sparkContext.getCheckpointDir().removeprefix("file:")
     assert any(os.scandir(session_dir))
     sp = sorted(map(tuple, neardup.simhash_pairs(df, checkpoint_dir=ckpt).collect()))
     assert sp == sorted(map(tuple, neardup.simhash_pairs(df).collect()))
 
 
-def test_checkpoint_dir_is_set_once_and_conflicts_warn(spark, tmp_path):
+def test_checkpoint_dir_is_set_once_and_conflicts_raise(
+    spark, checkpoint_dir, tmp_path
+):
     """setCheckpointDir is session-global: the first reliable-checkpoint
-    caller wins, a conflicting later dir warns and is ignored (the
-    checkpoint still happens, under the session's dir)."""
+    caller wins, the same dir again checkpoints silently, and a
+    conflicting later dir raises instead of being ignored."""
     import warnings
 
     from bigbookapi_etl_with_airflow_and_snowflake_spark.operators.neardup import (
@@ -394,21 +396,16 @@ def test_checkpoint_dir_is_set_once_and_conflicts_warn(spark, tmp_path):
     )
 
     df = spark.range(5)
-    first = str(tmp_path / "ckpt_a")
-    _materialize(df, first)
     current = spark.sparkContext.getCheckpointDir()
-    assert current is not None  # set by us, or by an earlier test (kept)
-    # same dir again: silent
+    assert _same_checkpoint_dir(current, checkpoint_dir)
+    # same dir again (as requested, or as the context records it): silent
     with warnings.catch_warnings():
         warnings.simplefilter("error")
-        if _same_checkpoint_dir(current, first):
-            _materialize(df, first)
-    # different dir: warns, keeps the session dir, still checkpoints
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        out = _materialize(df, str(tmp_path / "ckpt_b"))
-        assert out.count() == 5
-        assert any("checkpoint dir is already" in str(x.message) for x in w)
+        assert _materialize(df, checkpoint_dir).count() == 5
+        assert _materialize(df, current).count() == 5
+    # different dir: refused, the session dir is unchanged
+    with pytest.raises(ValueError, match="checkpoint dir is already"):
+        _materialize(df, str(tmp_path / "ckpt_b"))
     assert spark.sparkContext.getCheckpointDir() == current
 
 
